@@ -647,7 +647,7 @@ def connected_components(
     changed = 0
     prev_ckpt = None
     rounds = -(-max_iter // CC_STEPS_PER_ROUND)
-    for _ in range(rounds):
+    for rounds_run in range(1, rounds + 1):
         stepped = labels.withColumn("label0", F.col("label"))
         for _s in range(CC_STEPS_PER_ROUND):
             stepped = _propagate(stepped, ["label0"])
@@ -669,8 +669,10 @@ def connected_components(
         # returning partial labels would silently split components (graph
         # diameter > max_iter); callers must see the failure, not wrong data
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter"
+            f"connected_components did not converge after "
+            f"{rounds_run * CC_STEPS_PER_ROUND} propagation steps "
+            f"({rounds_run} rounds of {CC_STEPS_PER_ROUND}; {changed} labels "
+            f"still changing); raise max_iter"
         )
     return labels.select(F.col("node"), F.col("label").alias("component"))
 

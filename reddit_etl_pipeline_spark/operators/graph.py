@@ -149,6 +149,30 @@ def pagerank(
     return ranks
 
 
+def _undirected(
+    edges: DataFrame, src: str, dst: str, assume_normalized: bool
+) -> DataFrame:
+    """The distinct undirected ``(lo, hi)`` edge set without self-loops,
+    materialized ONCE: every consumer (degree builds, orientation and
+    closing joins, per-round adjacency) reads the checkpoint instead of
+    re-running the caller's lineage (the minhash/jaccard house pattern;
+    blocks free on GC). ``assume_normalized``: the input already IS such
+    a materialized set (e.g. ``graph_store.store_edges`` — parquet-backed,
+    so re-reads hit columnar storage): rename only, skipping the
+    normalize shuffle and the re-materialization."""
+    if assume_normalized:
+        return edges.select(F.col(src).alias("lo"), F.col(dst).alias("hi"))
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("lo"),
+            F.greatest(F.col(src), F.col(dst)).alias("hi"),
+        )
+        .filter(F.col("lo") != F.col("hi"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
 def triangle_counts(
     edges: DataFrame,
     src: str = "src",
@@ -182,26 +206,7 @@ def triangle_counts(
     skip re-normalizing and re-materializing the identical relation.
     ``degrees``: a precomputed, materialized (node, deg) frame over that
     same edge set — skip the internal degree build."""
-    if assume_normalized:
-        und = edges.select(
-            F.col(src).alias("lo"), F.col(dst).alias("hi")
-        )
-    else:
-        # normalize: undirected distinct edges as (lo, hi), no
-        # self-loops. localCheckpoint FIRST: und feeds the degree build,
-        # the orientation join, and the closing join — every consumer
-        # must read the materialized edges, not re-run the caller's
-        # normalize lineage (the minhash/jaccard house pattern; blocks
-        # free on GC)
-        und = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("lo"),
-                F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            )
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    und = _undirected(edges, src, dst, assume_normalized)
     tris = _oriented_triangles(und, degrees=degrees, broadcast_edges=broadcast_edges)
     return (
         tris.select(F.explode(F.array("a", "b", "c")).alias("node"))
@@ -302,22 +307,7 @@ def triangle_estimate(
             f"sample_den must be a power of two and 0 < num <= den, got "
             f"{sample_num}/{sample_den}"
         )
-    if assume_normalized:
-        # input IS an already-materialized normalized (lo, hi) edge set
-        # (e.g. graph_store.store_edges — parquet-backed, so re-reads hit
-        # columnar storage, not a rebuild lineage): skip the normalize
-        # shuffle + re-materialization
-        und = edges.select(F.col(src).alias("lo"), F.col(dst).alias("hi"))
-    else:
-        und = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("lo"),
-                F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            )
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    und = _undirected(edges, src, dst, assume_normalized)
     n_edges = und.count()
     sampled = und.filter(
         F.expr(f"(xxhash64(lo, hi) & {sample_den - 1}) < {sample_num}")
@@ -368,21 +358,9 @@ def kcore_members(
     deeper than the bound and this raises — the oracle would be wrong
     there too, so divergence is loud, never silent).
     """
-    if assume_normalized:
-        # already-materialized normalized (lo, hi) set (graph_store):
-        # round 0 reads it straight off parquet; later rounds checkpoint
-        # their own shrunken edge sets as before
-        cur = edges.select(F.col(src).alias("lo"), F.col(dst).alias("hi"))
-    else:
-        cur = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("lo"),
-                F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            )
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    # round 0 reads the normalized set; later rounds checkpoint their own
+    # shrunken edge sets
+    cur = _undirected(edges, src, dst, assume_normalized)
     n_edges = cur.count()
     for r in range(max_rounds + 1):
         deg = (
@@ -440,18 +418,7 @@ def clustering_coefficients(
     skip both builds when the caller supplies the materialized
     normalized edge set and its (node, deg) relation.
     """
-    if assume_normalized:
-        und = edges.select(F.col(src).alias("lo"), F.col(dst).alias("hi"))
-    else:
-        und = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("lo"),
-                F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            )
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    und = _undirected(edges, src, dst, assume_normalized)
     if degrees is not None:
         deg = degrees.select(
             "node", F.col(degrees.columns[1]).alias("degree")
@@ -511,20 +478,7 @@ def label_propagation(
     Scale: per round one (2|E|+|V|)-row join against the |V|-row label
     table + two map-side-combinable aggregates — O(E) per round like the
     k-core peel; labels checkpoint each round (lineage discipline)."""
-    if assume_normalized:
-        # materialized normalized (lo, hi) input (graph_store): the two
-        # adjacency selects re-read parquet instead of a rebuilt lineage
-        und = edges.select(F.col(src).alias("lo"), F.col(dst).alias("hi"))
-    else:
-        und = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("lo"),
-                F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            )
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    und = _undirected(edges, src, dst, assume_normalized)
     nodes = (
         und.select(F.col("lo").alias("node"))
         .unionAll(und.select(F.col("hi").alias("node")))
@@ -588,18 +542,7 @@ def seed_distances(
     (the oracle unrolls the same count; an exhausted frontier makes the
     remaining rounds no-ops on both engines). O(frontier-degree) work
     per round, all integer."""
-    if assume_normalized:
-        und = edges.select(F.col(src).alias("lo"), F.col(dst).alias("hi"))
-    else:
-        und = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("lo"),
-                F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            )
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    und = _undirected(edges, src, dst, assume_normalized)
     adj = (
         und.select(F.col("lo").alias("node"), F.col("hi").alias("nbr"))
         .unionAll(und.select(F.col("hi").alias("node"), F.col("lo").alias("nbr")))
@@ -813,18 +756,7 @@ def community_modularity(
     micro-grid). Scale shape: two label joins over the edge set, three
     tiny per-community aggregates, the global m attached via a window
     over the per-community frame — no scalar collect, no cartesian."""
-    if assume_normalized:
-        und = edges.select(F.col(src).alias("lo"), F.col(dst).alias("hi"))
-    else:
-        und = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("lo"),
-                F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            )
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    und = _undirected(edges, src, dst, assume_normalized)
     la = labels.select(F.col("node").alias("lo"), F.col("community").alias("ca"))
     lb = labels.select(F.col("node").alias("hi"), F.col("community").alias("cb"))
     el = und.join(la, "lo").join(lb, "hi").select("ca", "cb")
@@ -982,22 +914,10 @@ def link_prediction(
             f"sample_den must be a power of two and 0 < num <= den, got "
             f"{sample_num}/{sample_den}"
         )
-    if assume_normalized:
-        # graph-store fast path: und reads the materialized partials;
-        # full-graph degrees come from the store's additive degree
-        # partials when supplied (never re-aggregating the edge set)
-        und = edges.select(F.col(src).alias("lo"), F.col(dst).alias("hi"))
-    else:
-        und = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("lo"),
-                F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            )
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    und = _undirected(edges, src, dst, assume_normalized)
     if degrees is not None:
+        # graph-store fast path: full-graph degrees come from the store's
+        # additive degree partials (never re-aggregating the edge set)
         deg = degrees.select("node", F.col(degrees.columns[1]).alias("deg"))
     else:
         deg = (

@@ -16,6 +16,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _SCRATCH_ROOT: str | None = None
 
@@ -56,7 +57,10 @@ def _iter_arrow_tables(subitem):
     """Yield pyarrow Tables for one merged-batch constituent: a pyarrow
     Table passes through; a parquet file path reads as one table; a
     Spark-written table directory yields one table per part (row-group
-    streaming — never the whole directory in memory at once)."""
+    streaming — never the whole directory in memory at once). The parts
+    MUST land in one staged file: as separate files each part would be
+    its own micro-batch, parts are not time-ordered, and an early batch
+    advancing the watermark would drop a later part's rows as late."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -72,23 +76,32 @@ def _iter_arrow_tables(subitem):
         yield pq.read_table(src)
 
 
+def _file_stream(
+    spark: SparkSession, schema: StructType, stream_dir: str
+) -> DataFrame:
+    """The one reader of a staged directory: one file = one micro-batch
+    (``maxFilesPerTrigger=1`` plus the stagers' 3 s mtime stagger keeps
+    staging order), schema pinned because file streams cannot infer."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stream_dir)
+    )
+
+
 def stage_bounded_stream(
-    items: list, prefix: str = "bounded_stream_"
-) -> str:
-    """Stage a list of DataFrames / parquet part-file paths / pyarrow
-    Tables as an ordered micro-batch sequence for a file-source stream.
+    items: list, schema: StructType, prefix: str = "bounded_stream_"
+) -> DataFrame:
+    """Stage a list of DataFrames / pyarrow Tables / lists of parquet
+    paths and Tables as an ordered micro-batch sequence and return the
+    file-source stream (``schema``) that replays them.
 
     File streams order batches by modification time; each item gets an
-    mtime 3 s after the previous so ``maxFilesPerTrigger=1`` delivers item
-    i in micro-batch i. DataFrames are written to scratch dirs and moved
-    in; existing part files are COPIED — never hard/soft-linked, because
-    the mtime stagger on a linked file would mutate the shared inode (and
-    with it the original file's metadata, which may be read-only
-    testdata). A LIST item merges its constituents (paths / pyarrow
-    Tables) into ONE staged file = one micro-batch — the cheap way to
-    co-deliver a small control row (e.g. a watermark sentinel) with a
-    data batch without a Spark write job. Returns the stream source
-    directory.
+    mtime 3 s after the previous so item i is micro-batch i. DataFrames
+    are written to scratch dirs and moved in. A LIST item merges its
+    constituents (paths / pyarrow Tables) into ONE staged file = one
+    micro-batch — the cheap way to co-deliver a small control row (e.g.
+    a watermark sentinel) with a data batch without a Spark write job.
     """
     import shutil
 
@@ -99,7 +112,15 @@ def stage_bounded_stream(
     now = time.time()
     for i, item in enumerate(items):
         dst = f"{stream_dir}/{i}.parquet"
-        if isinstance(item, (list, tuple)) or isinstance(item, pa.Table):
+        if isinstance(item, DataFrame):
+            d = scratch_dir(f"{prefix}item{i}_")
+            item.coalesce(1).write.mode("overwrite").parquet(d)
+            src = next(
+                f"{d}/{p}" for p in os.listdir(d) if p.endswith(".parquet")
+            )
+            os.replace(src, dst)
+            shutil.rmtree(d, ignore_errors=True)
+        else:
             subs = item if isinstance(item, (list, tuple)) else [item]
             # A pyarrow-Table constituent is an engine-built control row
             # (e.g. the watermark sentinel) whose schema was pinned to the
@@ -124,48 +145,8 @@ def stage_bounded_stream(
             if writer is None:
                 continue  # all constituents empty
             writer.close()
-            os.utime(dst, (now + i * 3, now + i * 3))
-            continue
-        if isinstance(item, DataFrame):
-            d = scratch_dir(f"{prefix}item{i}_")
-            item.coalesce(1).write.mode("overwrite").parquet(d)
-            src = next(
-                f"{d}/{p}" for p in os.listdir(d) if p.endswith(".parquet")
-            )
-            os.replace(src, dst)
-            shutil.rmtree(d, ignore_errors=True)
-            os.utime(dst, (now + i * 3, now + i * 3))
-            continue
-        src = os.path.abspath(item)
-        if os.path.isdir(src):
-            # a Spark-written table: merge its parts into ONE staged file.
-            # Staging parts as separate files would be a correctness bug,
-            # not just micro-batch overhead: with maxFilesPerTrigger=1
-            # each part is its own batch, parts are NOT time-ordered, and
-            # once an early batch advances the watermark past a later
-            # part's data, those rows are silently dropped as late. One
-            # file = one micro-batch = no intra-item watermark movement.
-            # pyarrow row-group append — no Spark job, no decompression
-            # blowup in driver memory beyond one part at a time.
-            import pyarrow.parquet as pq
-
-            parts = sorted(
-                p for p in os.listdir(src) if p.endswith(".parquet")
-            )
-            writer = None
-            for p in parts:
-                t = pq.read_table(f"{src}/{p}")
-                if writer is None:
-                    writer = pq.ParquetWriter(dst, t.schema)
-                writer.write_table(t)
-            if writer is None:
-                continue  # empty table: nothing to stage
-            writer.close()
-            os.utime(dst, (now + i * 3, now + i * 3))
-        else:
-            shutil.copy2(src, dst)
-            os.utime(dst, (now + i * 3, now + i * 3))
-    return stream_dir
+        os.utime(dst, (now + i * 3, now + i * 3))
+    return _file_stream(SparkSession.active(), schema, stream_dir)
 
 
 def stage_sliced_stream(
@@ -173,72 +154,53 @@ def stage_sliced_stream(
     slice_col,
     n_slices: int,
     prefix: str = "bounded_stream_",
-) -> str:
+) -> DataFrame:
     """Stage ``df`` as ``n_slices`` ordered micro-batches in ONE Spark
-    write (round 11, guide §2.4/§1.2): the previous shape evaluated the
-    source plan once PER SLICE (``[df.filter(slice == i) for i ...]``
-    through :func:`stage_bounded_stream` = n_slices scans + n_slices
-    single-task ``coalesce(1)`` write jobs). Here the slice id becomes a
-    partition column written in one pass (one scan of the plan), then
-    partition directories are merged into per-slice staged files
-    driver-side with pyarrow (the same row-group append
-    :func:`stage_bounded_stream` uses for directory items — no second
-    Spark job). Row order within a micro-batch is as unordered as the
-    coalesce(1) shape's task order was; batch MEMBERSHIP, which is what
-    every fold law and first-arrival policy keys on, is identical.
+    write and return the file-source stream (``df.schema``) that replays
+    them. The slice id becomes a partition column and rows are
+    repartitioned by it first, so each slice is written by one task as
+    ONE part file, which is then moved into place: one scan of the
+    source plan, no driver-side reads. Row order within a micro-batch is
+    unordered; batch MEMBERSHIP, which is what every fold law and
+    first-arrival policy keys on, is fixed by ``slice_col``.
 
     ``slice_col`` must evaluate to an integer in [0, n_slices); a slice
-    with no rows still yields an (empty) micro-batch so batch ids line
-    up with the caller's expectations regardless of data skew.
+    with no rows (an empty or skewed source) still gets a zero-row file,
+    so batch ids line up with the caller's expectations.
     """
+    import shutil
+
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     part_dir = scratch_dir(f"{prefix}parts_")
-    out = f"{part_dir}/t"
-    df.withColumn("__slice", slice_col.cast("int")).write.partitionBy(
+    df.withColumn("__slice", slice_col.cast("int")).repartition(
         "__slice"
-    ).mode("overwrite").parquet(out)
+    ).write.partitionBy("__slice").mode("overwrite").parquet(part_dir)
     stream_dir = scratch_dir(prefix)
     now = time.time()
-    # schema of the staged files == df.schema (partitionBy drops __slice
-    # from the data files); empty slices get a zero-row file of the same
-    # schema so every slice is delivered as its own micro-batch
-    empty_schema = None
     for i in range(n_slices):
         dst = f"{stream_dir}/{i}.parquet"
-        src = f"{out}/__slice={i}"
-        writer = None
-        if os.path.isdir(src):
-            for p in sorted(os.listdir(src)):
-                if p.endswith(".parquet"):
-                    t = pq.read_table(f"{src}/{p}")
-                    if writer is None:
-                        writer = pq.ParquetWriter(dst, t.schema)
-                    writer.write_table(t)
-        if writer is None:
-            if empty_schema is None:
-                # derive an arrow schema from any written slice, else
-                # from a zero-row spark write of the frame's own schema
-                sample = None
-                for j in range(n_slices):
-                    sdir = f"{out}/__slice={j}"
-                    if os.path.isdir(sdir):
-                        for p in sorted(os.listdir(sdir)):
-                            if p.endswith(".parquet"):
-                                sample = pq.read_schema(f"{sdir}/{p}")
-                                break
-                    if sample is not None:
-                        break
-                if sample is None:
-                    raise ValueError(
-                        "stage_sliced_stream: no slice produced any file"
-                    )
-                empty_schema = sample
-            writer = pq.ParquetWriter(dst, empty_schema)
-            writer.write_table(empty_schema.empty_table())
-        writer.close()
+        src = f"{part_dir}/__slice={i}"
+        parts = (
+            [p for p in os.listdir(src) if p.endswith(".parquet")]
+            if os.path.isdir(src)
+            else []
+        )
+        if len(parts) > 1:
+            # a session-level maxRecordsPerFile split the slice; staging
+            # the parts as separate files would break batch membership
+            raise RuntimeError(
+                f"stage_sliced_stream: slice {i} was written as "
+                f"{len(parts)} files; one micro-batch must be one file"
+            )
+        if parts:
+            os.replace(f"{src}/{parts[0]}", dst)
+        else:
+            pq.write_table(to_arrow_schema(df.schema).empty_table(), dst)
         os.utime(dst, (now + i * 3, now + i * 3))
-    return stream_dir
+    shutil.rmtree(part_dir, ignore_errors=True)
+    return _file_stream(df.sparkSession, df.schema, stream_dir)
 
 
 def run_stream_to_batch(

@@ -229,14 +229,8 @@ def _bounded_events_stream(
         sentinel_ts = max_ts + datetime.timedelta(seconds=margin_seconds)
     src = f"{sf_dir}/events.parquet"
     sentinel = _event_sentinel_table(src, sentinel_ts)
-    d = stage_bounded_stream(
-        [[src, sentinel], sentinel],
-        prefix="events_bounded_",
-    )
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    stream = stage_bounded_stream(
+        [[src, sentinel], sentinel], batch.schema, prefix="events_bounded_"
     )
     return _normalize_ts(stream), ns_ts
 
@@ -388,14 +382,11 @@ def streamed_sketch_store(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = stage_sliced_stream(
-        batch, F.col("event_id") % n_slices, n_slices,
-        prefix="sketch_store_stream_",
-    )
     stream = _normalize_ts(
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+        stage_sliced_stream(
+            batch, F.col("event_id") % n_slices, n_slices,
+            prefix="sketch_store_stream_",
+        )
     )
     store = scratch_dir("stream_sketch_store_") + "/hll_users"
 
@@ -459,14 +450,9 @@ def streamed_domain_rollup(
 
     n_slices = resolve_slices(n_slices, 3)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    src_dir = stage_sliced_stream(
+    stream = stage_sliced_stream(
         docs, F.col("doc_id") % n_slices, n_slices,
         prefix="domain_rollup_stream_",
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
     )
     store = scratch_dir("domain_rollup_store_")
 
@@ -582,14 +568,9 @@ def streamed_graph_store(
     from ..plans.star import load
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    src_dir = stage_sliced_stream(
+    stream = stage_sliced_stream(
         li, F.col("l_orderkey") % n_slices, n_slices,
         prefix="graph_store_stream_",
-    )
-    stream = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
     )
     store = scratch_dir("stream_graph_store_")
 
@@ -642,13 +623,8 @@ def streamed_ann_store(
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents = ANS.init_store(emb, (store := scratch_dir("stream_ann_store_")))
-    src_dir = stage_sliced_stream(
+    stream = stage_sliced_stream(
         emb, F.col("vec_id") % n_slices, n_slices, prefix="ann_store_stream_"
-    )
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
     )
 
     def ingest(b: DataFrame, batch_id: int) -> None:
@@ -698,14 +674,9 @@ def streamed_minhash_store(
 
     docs = load(spark, sf_dir, "documents")
     NS.init_store(spark, (store := scratch_dir("stream_minhash_store_")))
-    src_dir = stage_sliced_stream(
+    stream = stage_sliced_stream(
         docs, F.col("doc_id") % n_slices, n_slices,
         prefix="minhash_store_stream_",
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
     )
 
     def ingest(b: DataFrame, batch_id: int) -> None:
@@ -744,13 +715,10 @@ def streamed_kmv_distinct(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = stage_sliced_stream(
-        batch, F.col("event_id") % n_slices, n_slices, prefix="kmv_stream_"
-    )
     stream = _normalize_ts(
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+        stage_sliced_stream(
+            batch, F.col("event_id") % n_slices, n_slices, prefix="kmv_stream_"
+        )
     )
     state_path = scratch_dir("kmv_state_") + "/state"
 
@@ -862,13 +830,8 @@ def streamed_bloom_contamination(
     banned = docs.filter(F.col("doc_id") % banned_mod == 0).select(
         "doc_id", "source", "text"
     )
-    d = stage_sliced_stream(
+    stream = stage_sliced_stream(
         banned, F.col("doc_id") % n_slices, n_slices, prefix="bloom_stream_"
-    )
-    stream = (
-        spark.readStream.schema(banned.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
     )
     words = SK.bloom_build(SK.bloom_fingerprints(stream))
     bloom = run_stream_to_batch(words, spark, output_mode="complete")
@@ -922,7 +885,7 @@ def streamed_purchase_click_join(
     # the stream's fixed schema (nanos and micros sources both).
     sentinel = _event_sentinel_table(f"{sf_dir}/events.parquet", sentinel_ts)
 
-    def side_dir(event_type: str) -> str:
+    def read_side(event_type: str, alias: str) -> DataFrame:
         # TWO sentinel batches per side (same reasoning as
         # _bounded_events_stream): outer-join unmatched-row emission
         # happens during state eviction in a batch processed UNDER the
@@ -932,20 +895,14 @@ def streamed_purchase_click_join(
         # its own file here (unlike the riding sentinel in
         # _bounded_events_stream) because stream-stream join state must
         # demonstrably cross the batch boundary in both modes.
-        return stage_bounded_stream(
+        s = stage_bounded_stream(
             [
                 batch.filter(F.col("event_type") == event_type),
                 sentinel,
                 sentinel,
             ],
+            batch.schema,
             prefix=f"ssj_{event_type}_",
-        )
-
-    def read_side(path: str, alias: str) -> DataFrame:
-        s = (
-            spark.readStream.schema(batch.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
         )
         s = _normalize_ts(s)
         return s.select(
@@ -956,8 +913,8 @@ def streamed_purchase_click_join(
             F.col("event_type").alias(f"{alias}_type"),
         ).withWatermark(f"{alias}_ts", "1 hour")
 
-    purchases = read_side(side_dir("purchase"), "p")
-    clicks = read_side(side_dir("click"), "c")
+    purchases = read_side("purchase", "p")
+    clicks = read_side("click", "c")
     # NO event_type predicates in the join condition: each side is
     # already staged pre-filtered, and a side-local predicate here gets
     # pushed below that side's EventTimeWatermark node into the scan —
@@ -1195,8 +1152,8 @@ def streamed_sessionize(
     Production drain: the stream is watermarked and the sessionizer uses
     event-time timeouts, so ONE global watermark-advancing sentinel row
     (not one per user) flushes every open session; results land in a
-    parquet file sink. With maxFilesPerTrigger=1 the sentinel lands in a
-    later micro-batch, so session state genuinely crosses batch
+    parquet file sink. One staged file per micro-batch puts the
+    sentinel in a later micro-batch, so session state genuinely crosses batch
     boundaries before the timeout drains it.
     """
     stream, _ = _bounded_events_stream(
@@ -1290,15 +1247,11 @@ def streamed_upsert_latest(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = stage_sliced_stream(
-        batch, F.col("event_id") % n_slices, n_slices, prefix="upsert_stream_"
+    stream = _normalize_ts(
+        stage_sliced_stream(
+            batch, F.col("event_id") % n_slices, n_slices, prefix="upsert_stream_"
+        )
     )
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    stream = _normalize_ts(stream)
     warehouse = scratch_dir("upsert_wh_") + "/events_latest"
 
     def merge(b: DataFrame, _batch_id: int) -> None:
@@ -1484,14 +1437,9 @@ def _drain_id_sliced_stream(
     # [i*chunk, (i+1)*chunk) exactly (ids are non-negative, hi < n*chunk),
     # and the one-pass stager evaluates the candidate plan ONCE instead
     # of once per slice (round 11 — `new` is often a derived frame)
-    src_dir = stage_sliced_stream(
+    stream = stage_sliced_stream(
         new, F.expr(f"{id_col} div {chunk}"), n_slices,
         prefix=f"{prefix}stream_",
-    )
-    stream = (
-        spark.readStream.schema(new.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
     )
     chk = scratch_dir(f"{prefix}chk_")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -1663,7 +1611,7 @@ def neardup_batch_against_index(
             f"than max_batch_edges={max_batch_edges} verified within-batch "
             f"near-dup edges; the greedy first-arrival resolution is "
             f"driver-side by design and this batch would not fit. Shrink "
-            f"the trigger (maxFilesPerTrigger / maxBytesPerTrigger), raise "
+            f"the source's per-trigger file or byte limit, raise "
             f"the threshold, or raise max_batch_edges explicitly."
         )
     edges = [(r.id_a, r.id_b) for r in edge_rows]
@@ -2376,13 +2324,8 @@ def streamed_part_components(
     from ..plans.star import load
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    src_dir = stage_sliced_stream(
+    stream = stage_sliced_stream(
         li, F.col("l_orderkey") % n_slices, n_slices, prefix="cc_stream_"
-    )
-    stream = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
     )
     state_path = scratch_dir("cc_state_") + "/state"
 

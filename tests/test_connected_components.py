@@ -24,9 +24,12 @@ def test_cc_converges_on_path_graph(spark):
 
 
 def test_cc_raises_instead_of_returning_partial_labels(spark):
-    # diameter 12 cannot converge in 2 rounds; silent partial labels would
-    # split one component into several — must raise instead
-    with pytest.raises(RuntimeError, match="did not converge"):
+    # diameter 12 cannot converge in 2 propagation steps (one fused
+    # round); silent partial labels would split one component into
+    # several — must raise, reporting the steps actually executed
+    with pytest.raises(
+        RuntimeError, match=r"did not converge after 2 propagation steps \(1 rounds of 2;"
+    ):
         connected_components(_path_graph(spark, 12), max_iter=2)
 
 

@@ -1,12 +1,17 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for declared queries to plans/r10/.
+"""Dump the formatted physical plan of declared queries — the review
+artifact for plan-quality iteration (pushdown, pruning, join strategies,
+codegen spans) and for before/after plan diffs.
 
-Usage: python tools/dump_plans.py <suffix> [q1,q2,...]
+Usage: python tools/dump_plans.py <out_dir> <suffix> [q1,q2,...]
 
-Writes plans/r10/<query>_<suffix>.txt for each query (default: all
-queries()). Plan generation is driver-side; store-backed queries build
-their store on first touch, so this is not free for those — run it
-serialized with other Spark work like any measurement.
+Writes <out_dir>/<query>_<suffix>.txt for each query (default: all
+queries()) over ``SPARK_GRAFT_SF_DIR`` (default sf0.1). ``stream_*``
+queries are skipped: the returned DataFrame is the post-run file-sink
+read-back, so its "plan" is just a parquet scan. Plan generation is
+driver-side; store-backed queries build their store on first touch, so
+this is not free for those — run it serialized with other Spark work
+like any measurement.
 """
 
 from __future__ import annotations
@@ -17,21 +22,21 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r10")
+SKIP_PREFIX = "stream_"
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
+    out_dir, suffix = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 
     from reddit_etl_pipeline_spark.session import get_spark
     import __spark_entry__ as entrymod
 
-    os.makedirs(OUT_DIR, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="dump_plans")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for name, fn in entrymod.queries().items():
-        if only is not None and name not in only:
+        if name.startswith(SKIP_PREFIX) or (only is not None and name not in only):
             continue
         try:
             df = fn(spark, SF_DIR)
@@ -42,7 +47,7 @@ def main() -> None:
             )
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR building plan: {e}"
-        with open(os.path.join(OUT_DIR, f"{name}_{suffix}.txt"), "w") as fh:
+        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
         print(f"wrote {name}_{suffix}.txt")
     spark.stop()
