@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint
-from .similarity import _free_local_checkpoint
+from .fixpoint import iterate
 
 ROUND_DP = 6
 
@@ -589,20 +589,16 @@ def connected_components(
     only the redundant distinct shuffle of the symmetrized union, keep
     the checkpoint that pins one execution of the pair-generation plan.
     """
-    if pre_normalized:
-        edges = pairs.select(
-            F.col(src).alias("s"), F.col(dst).alias("d")
-        ).unionAll(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-    else:
-        sym = pairs.select(
-            F.col(src).alias("s"), F.col(dst).alias("d")
-        ).unionAll(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
+    edges = pairs.select(
+        F.col(src).alias("s"), F.col(dst).alias("d")
+    ).unionAll(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
+    if not pre_normalized:
         if not assume_distinct:
-            sym = sym.distinct()
+            edges = edges.distinct()
         # materialize once: every propagation round re-reads the edge
         # set, and without this the (possibly expensive) pair-
         # generation plan above would re-execute per round
-        edges = sym.localCheckpoint(eager=True)
+        edges = edges.localCheckpoint(eager=True)
     labels = (
         edges.select(F.col("s").alias("node")).distinct().withColumn("label", F.col("node"))
     )
@@ -644,36 +640,28 @@ def connected_components(
     # step changed a label, the round's end state differs from its
     # start), and running extra steps past the fixpoint is a no-op —
     # final labels are bit-identical to single-stepping.
-    changed = 0
-    prev_ckpt = None
-    rounds = -(-max_iter // CC_STEPS_PER_ROUND)
-    for rounds_run in range(1, rounds + 1):
-        stepped = labels.withColumn("label0", F.col("label"))
+    def _round(lbl: DataFrame, _r: int) -> DataFrame:
+        stepped = lbl.select("node", "label").withColumn("label0", F.col("label"))
         for _s in range(CC_STEPS_PER_ROUND):
             stepped = _propagate(stepped, ["label0"])
-        # checkpoint BEFORE the change count: the count and the next
-        # round both read the materialized blocks, so the propagation
-        # joins execute once per round, not twice (count-then-checkpoint
-        # re-ran them). The superseded round's blocks are freed once the
-        # new checkpoint exists — a long loop would otherwise pin
-        # O(rounds) corpus-sized label copies in the block manager.
-        new_labels = stepped.localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("label") != F.col("label0")).count()
-        if prev_ckpt is not None:
-            _free_local_checkpoint(prev_ckpt)
-        prev_ckpt = new_labels
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            break
-    if changed != 0:
+        return stepped
+
+    # the change count reads the round's checkpoint (label0 rides along),
+    # so the propagation joins execute once per round, not twice
+    labels = iterate(
+        labels,
+        _round,
+        -(-max_iter // CC_STEPS_PER_ROUND),
+        changed=lambda lbl: lbl.filter(F.col("label") != F.col("label0")).count(),
         # returning partial labels would silently split components (graph
         # diameter > max_iter); callers must see the failure, not wrong data
-        raise RuntimeError(
+        stuck=lambda rounds_run, n: RuntimeError(
             f"connected_components did not converge after "
             f"{rounds_run * CC_STEPS_PER_ROUND} propagation steps "
-            f"({rounds_run} rounds of {CC_STEPS_PER_ROUND}; {changed} labels "
+            f"({rounds_run} rounds of {CC_STEPS_PER_ROUND}; {n} labels "
             f"still changing); raise max_iter"
-        )
+        ),
+    )
     return labels.select(F.col("node"), F.col("label").alias("component"))
 
 

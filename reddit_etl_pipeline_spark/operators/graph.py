@@ -11,9 +11,9 @@ Scale design (100 TB):
   small, shuffle otherwise), explode contributions along edges, one
   map-side-combined groupBy(dst). Iterations are driver-coordinated but
   each is a fully distributed pass — the standard Pregel-style loop.
-- ``localCheckpoint`` every few rounds cuts the lineage chain that would
-  otherwise grow linearly with iterations (same discipline as
-  connected_components in dedup.py).
+- ``localCheckpoint`` every ``PAGERANK_CHECKPOINT_EVERY`` rounds cuts the
+  lineage chain that would otherwise grow linearly with iterations (the
+  other iterative operators checkpoint per round via ``fixpoint.iterate``).
 - Dangling nodes (no out-edges) leak rank mass by design in the simple
   formulation; ``redistribute_dangling=True`` adds the textbook
   correction (dangling mass spread uniformly) at the cost of one extra
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .fixpoint import iterate
 
 __all__ = [
     "pagerank",
@@ -46,6 +48,10 @@ __all__ = [
     "link_prediction",
     "link_prediction_oracle_sql",
 ]
+
+#: pagerank checkpoints its ranks every this many iterations and after the
+#: last one (a per-round checkpoint measured more jobs and more wall time)
+PAGERANK_CHECKPOINT_EVERY = 4
 
 
 def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -70,10 +76,10 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     redistribute_dangling: bool = True,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """PageRank over a directed edge list: returns (node, rank) with
-    ranks summing to the node count (uniform start = 1.0 each).
+    ranks summing to the node count (uniform start = 1.0 each); an empty
+    edge list gives an empty (node, rank) frame.
 
     Deterministic given a partitioning; across partitionings ranks agree
     to float tolerance (contribution sums reduce in partition order).
@@ -92,6 +98,8 @@ def pagerank(
         .localCheckpoint()
     )
     n_nodes = nodes.count()
+    if n_nodes == 0:
+        return nodes.withColumn("rank", F.lit(1.0))
     # node-cardinality; pinned once for the same reason — every
     # iteration's rank⋈degree join reads it
     out_deg = edges.groupBy(F.col(src).alias("node")).agg(
@@ -138,14 +146,11 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 or i + 1 == iters:
             ranks = ranks.localCheckpoint()
             for df in pinned:
                 df.unpersist()
             pinned.clear()
-    ranks = ranks.localCheckpoint()
-    for df in pinned:
-        df.unpersist()
     return ranks
 
 
@@ -170,6 +175,16 @@ def _undirected(
         .filter(F.col("lo") != F.col("hi"))
         .distinct()
         .localCheckpoint(eager=True)
+    )
+
+
+def _degrees(und: DataFrame, name: str) -> DataFrame:
+    """(node, ``name``): each node's degree in a ``(lo, hi)`` edge set."""
+    return (
+        und.select(F.col("lo").alias("node"))
+        .unionAll(und.select(F.col("hi").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias(name))
     )
 
 
@@ -231,13 +246,7 @@ def _oriented_triangles(
         # aggregate runs ONCE (dl and dh below are two independent join
         # branches; Spark does no cross-branch subtree reuse, so without
         # this the degree build executes twice per run)
-        deg = (
-            und.select(F.col("lo").alias("node"))
-            .unionAll(und.select(F.col("hi").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=True)
-        )
+        deg = _degrees(und, "deg").localCheckpoint(eager=True)
     # orient by (deg, id): u -> v iff (deg_u, u) < (deg_v, v)
     dl = deg.select(F.col("node").alias("lo"), F.col("deg").alias("deg_lo"))
     dh = deg.select(F.col("node").alias("hi"), F.col("deg").alias("deg_hi"))
@@ -346,8 +355,8 @@ def kcore_members(
     O(E) per round, driver-coordinated like pagerank above. All deg < k
     nodes drop SIMULTANEOUSLY each round, so rounds = peel depth (6 on
     the co-purchase graph at both test SFs), not node count; the edge
-    set only shrinks. ``localCheckpoint`` per round cuts the lineage
-    chain (blocks free on GC — the triangle_counts discipline).
+    set only shrinks. Each round's edge set is checkpointed and the
+    previous one freed (``fixpoint.iterate``).
 
     Convergence is checked by edge count (filtering only removes rows,
     so an unchanged count IS the fixpoint). Up to ``max_rounds``
@@ -358,42 +367,34 @@ def kcore_members(
     deeper than the bound and this raises — the oracle would be wrong
     there too, so divergence is loud, never silent).
     """
-    # round 0 reads the normalized set; later rounds checkpoint their own
-    # shrunken edge sets
     cur = _undirected(edges, src, dst, assume_normalized)
     n_edges = cur.count()
-    for r in range(max_rounds + 1):
-        deg = (
-            cur.select(F.col("lo").alias("node"))
-            .unionAll(cur.select(F.col("hi").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        keep = deg.filter(F.col("deg") >= k).select("node")
-        nxt = (
-            cur.join(keep.withColumnRenamed("node", "lo"), "lo", "leftsemi")
-            .join(keep.withColumnRenamed("node", "hi"), "hi", "leftsemi")
-            .localCheckpoint(eager=True)
-        )
-        n_next = nxt.count()
-        cur = nxt
-        if n_next == n_edges:
-            break
-        if r == max_rounds:
-            # the round past the bound still shrank: peel depth exceeds
-            # what the oracle unrolls
-            raise ValueError(
-                f"kcore_members: no fixpoint within max_rounds="
-                f"{max_rounds} (edge count still shrinking). Raise "
-                f"max_rounds AND the oracle's unroll depth together."
-            )
-        n_edges = n_next
-    return (
-        cur.select(F.col("lo").alias("node"))
-        .unionAll(cur.select(F.col("hi").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("core_deg"))
+
+    def _peel(cur: DataFrame, _r: int) -> DataFrame:
+        keep = _degrees(cur, "deg").filter(F.col("deg") >= k).select("node")
+        return cur.join(
+            keep.withColumnRenamed("node", "lo"), "lo", "leftsemi"
+        ).join(keep.withColumnRenamed("node", "hi"), "hi", "leftsemi")
+
+    def _peeled(nxt: DataFrame) -> int:
+        nonlocal n_edges
+        n_prev, n_edges = n_edges, nxt.count()
+        return n_prev - n_edges
+
+    cur = iterate(
+        cur,
+        _peel,
+        max_rounds + 1,
+        changed=_peeled,
+        # the round past the bound still shrank: peel depth exceeds what
+        # the oracle unrolls
+        stuck=lambda *_: ValueError(
+            f"kcore_members: no fixpoint within max_rounds="
+            f"{max_rounds} (edge count still shrinking). Raise "
+            f"max_rounds AND the oracle's unroll depth together."
+        ),
     )
+    return _degrees(cur, "core_deg")
 
 
 def clustering_coefficients(
@@ -424,13 +425,7 @@ def clustering_coefficients(
             "node", F.col(degrees.columns[1]).alias("degree")
         ).localCheckpoint(eager=True)
     else:
-        deg = (
-            und.select(F.col("lo").alias("node"))
-            .unionAll(und.select(F.col("hi").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("degree"))
-            .localCheckpoint(eager=True)
-        )
+        deg = _degrees(und, "degree").localCheckpoint(eager=True)
     tri = triangle_counts(
         und, src="lo", dst="hi", assume_normalized=True, degrees=deg
     )
@@ -477,7 +472,7 @@ def label_propagation(
 
     Scale: per round one (2|E|+|V|)-row join against the |V|-row label
     table + two map-side-combinable aggregates — O(E) per round like the
-    k-core peel; labels checkpoint each round (lineage discipline)."""
+    k-core peel; labels checkpoint each round (``fixpoint.iterate``)."""
     und = _undirected(edges, src, dst, assume_normalized)
     nodes = (
         und.select(F.col("lo").alias("node"))
@@ -491,32 +486,26 @@ def label_propagation(
         .unionAll(nodes.select("node", F.col("node").alias("nbr")))
         .localCheckpoint(eager=True)
     )
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for _ in range(rounds):
+
+    def _vote(labels: DataFrame, _r: int) -> DataFrame:
         cnts = (
-            adj.join(
-                labels.select(
-                    F.col("node").alias("nbr"), "label"
-                ),
-                "nbr",
-            )
+            adj.join(labels.select(F.col("node").alias("nbr"), "label"), "nbr")
             .groupBy("node", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         # argmax by (cnt DESC, label ASC) as one map-side-combinable min
-        labels = (
-            cnts.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("cnt")).alias("nc"),
-                        F.col("label").alias("lb"),
-                    )
-                ).alias("best")
-            )
-            .select("node", F.col("best.lb").alias("label"))
-            .localCheckpoint(eager=True)
-        )
+        return cnts.groupBy("node").agg(
+            F.min(
+                F.struct(
+                    (-F.col("cnt")).alias("nc"),
+                    F.col("label").alias("lb"),
+                )
+            ).alias("best")
+        ).select("node", F.col("best.lb").alias("label"))
+
+    labels = iterate(
+        nodes.select("node", F.col("node").alias("label")), _vote, rounds
+    )
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -541,7 +530,8 @@ def seed_distances(
     fixpoint the oracle replays. Exactly ``max_hops`` rounds is the spec
     (the oracle unrolls the same count; an exhausted frontier makes the
     remaining rounds no-ops on both engines). O(frontier-degree) work
-    per round, all integer."""
+    per round, all integer. The frontier of hop h is read back from the
+    previous round's checkpoint as the rows at dist h-1."""
     und = _undirected(edges, src, dst, assume_normalized)
     adj = (
         und.select(F.col("lo").alias("node"), F.col("hi").alias("nbr"))
@@ -554,19 +544,18 @@ def seed_distances(
         .withColumn("dist", F.lit(0).cast("long"))
         .localCheckpoint(eager=True)
     )
-    frontier = dist.select("node")
-    for h in range(1, max_hops + 1):
-        reached = (
-            adj.join(frontier.select(F.col("node").alias("nbr")), "nbr")
-            .select("node")
-            .distinct()
+
+    def _hop(dist: DataFrame, h: int) -> DataFrame:
+        frontier = dist.filter(F.col("dist") == h - 1).select(
+            F.col("node").alias("nbr")
         )
+        reached = adj.join(frontier, "nbr").select("node").distinct()
         new = reached.join(dist, "node", "left_anti").withColumn(
             "dist", F.lit(h).cast("long")
         )
-        dist = dist.unionAll(new).localCheckpoint(eager=True)
-        frontier = new.select("node")
-    return dist
+        return dist.unionAll(new)
+
+    return iterate(dist, _hop, max_hops)
 
 
 def bfs_oracle_sql(
@@ -770,12 +759,7 @@ def community_modularity(
         .groupBy(F.col("ca").alias("community"))
         .agg(F.count(F.lit(1)).alias("intra_edges"))
     )
-    deg = (
-        und.select(F.col("lo").alias("node"))
-        .unionAll(und.select(F.col("hi").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _degrees(und, "d")
     degc = (
         deg.join(labels, "node")
         .groupBy("community")
@@ -920,12 +904,7 @@ def link_prediction(
         # additive degree partials (never re-aggregating the edge set)
         deg = degrees.select("node", F.col(degrees.columns[1]).alias("deg"))
     else:
-        deg = (
-            und.select(F.col("lo").alias("node"))
-            .unionAll(und.select(F.col("hi").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
+        deg = _degrees(und, "deg")
     sampled = und.filter(
         F.expr(f"(xxhash64(lo, hi) & {sample_den - 1}) < {sample_num}")
     )

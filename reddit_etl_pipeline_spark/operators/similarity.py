@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from .fixpoint import free_checkpoint
+
 ROUND_DP = 6
 # Similarities are rounded to this precision BEFORE ranking (not just at
 # output): numpy's pairwise summation and DuckDB's left-to-right
@@ -1100,23 +1102,6 @@ def lsh_bucket_table(
     return df.select(id_col, vec_col).mapInPandas(run, schema)
 
 
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Release the block-manager storage of a SUPERSEDED localCheckpoint.
-
-    ``DataFrame.unpersist()`` is a CacheManager call and does not touch
-    localCheckpoint blocks (verified: storage info unchanged); the blocks
-    live on the checkpointed RDD inside the LogicalRDD plan node, so we
-    unpersist that RDD directly. Only safe once nothing will read ``df``
-    again — the caller must have materialized its replacement first
-    (localCheckpoint is eager, so the next round's checkpoint exists
-    before we free the previous one). Best-effort: degrades to a no-op
-    if the plan shape ever changes."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def split_hot_buckets(
     b: DataFrame, cap: int, max_rounds: int = 4, extra_bits: int = 16
 ) -> DataFrame:
@@ -1210,7 +1195,7 @@ def split_hot_buckets(
         # the new checkpoint is materialized (localCheckpoint is eager);
         # release the superseded round's blocks instead of pinning up to
         # max_rounds corpus-sized copies in the block manager
-        _free_local_checkpoint(prev)
+        free_checkpoint(prev)
     return cur
 
 

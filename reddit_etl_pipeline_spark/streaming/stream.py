@@ -25,7 +25,7 @@ from .bounded import (  # noqa: F401
     stage_bounded_stream,
     stage_sliced_stream,
 )
-from ..operators.similarity import _free_local_checkpoint
+from ..operators.fixpoint import free_checkpoint
 
 
 def _read_index_or_none(spark: SparkSession, path: str) -> DataFrame | None:
@@ -1364,7 +1364,7 @@ def dedup_batch_against_index(
     accepted.select("fp").write.mode("overwrite").parquet(
         f"{index_path}/batch_id={batch_id}"
     )
-    _free_local_checkpoint(accepted)  # free this batch's checkpoint blocks
+    free_checkpoint(accepted)  # free this batch's checkpoint blocks
 
 
 def streamed_incremental_dedup(
@@ -1507,7 +1507,6 @@ def neardup_batch_against_index(
     bands: int = 16,
     text_col: str = "text",
     id_col: str = "doc_id",
-    band_index_path: str | None = None,
     max_batch_edges: int = 1_000_000,
 ) -> None:
     """Merge one micro-batch into a growing NEAR-dup-deduplicated corpus
@@ -1521,11 +1520,11 @@ def neardup_batch_against_index(
     ``batch_id=N`` partitions (overwrite per partition = replay
     idempotency, like the exact variant): (did, signature) at
     ``sig_index_path`` for candidate verification, and the PRE-BANDED
-    (did, band, bucket) rows at ``band_index_path`` (default
-    ``sig_index_path + "_bands"``) for the probe join. Persisting the
-    banded form means each micro-batch bands ONLY its own docs — without
-    it, re-banding the whole accepted index per batch makes total
-    banding work quadratic in corpus size over a run. The probe is then
+    (did, band, bucket) rows at ``sig_index_path + "_bands"`` for the
+    probe join; both tables are seeded before the first batch.
+    Persisting the banded form means each micro-batch bands ONLY its
+    own docs — without it, re-banding the whole accepted index per batch
+    makes total banding work quadratic in corpus size over a run. The probe is then
     a plain equi-join of the batch's bands against the stored band table
     (bounded by bucket occupancy); signature verification touches
     candidates only; the corpus text is never rescanned.
@@ -1541,8 +1540,7 @@ def neardup_batch_against_index(
 
     spark = batch.sparkSession
     rpb = num_perm // bands
-    if band_index_path is None:
-        band_index_path = sig_index_path + "_bands"
+    band_index_path = sig_index_path + "_bands"
     sigs = (
         minhash_signatures(batch, text_col, id_col, num_perm, shingle_n)
         .withColumnRenamed(id_col, "did")
@@ -1555,17 +1553,9 @@ def neardup_batch_against_index(
     survivors = sigs
     if idx is not None:
         idx = idx.filter(F.col("batch_id") < batch_id)  # replay safety
-        idx_bands = _read_index_or_none(spark, band_index_path)
-        if idx_bands is not None:
-            idx_bands = idx_bands.filter(F.col("batch_id") < batch_id).select(
-                F.col("did").alias("id_b"), "band", "bucket"
-            )
-        else:
-            # legacy index without a band table: band it once here (the
-            # very shape the band table exists to avoid per-batch)
-            idx_bands = _banded_sigs(
-                idx.select("did", "signature"), bands, rpb
-            ).withColumnRenamed("did", "id_b")
+        idx_bands = spark.read.parquet(band_index_path).filter(
+            F.col("batch_id") < batch_id
+        ).select(F.col("did").alias("id_b"), "band", "bucket")
         cand = (
             my_bands.withColumnRenamed("did", "id_a")
             .join(idx_bands, ["band", "bucket"])
@@ -1647,7 +1637,7 @@ def neardup_batch_against_index(
     # DataFrame.unpersist() is a CacheManager call that does NOT touch
     # localCheckpoint blocks — the RDD-level release is required.
     for df_ in (accepted, survivors, my_bands, sigs):
-        _free_local_checkpoint(df_)
+        free_checkpoint(df_)
 
 
 def streamed_incremental_neardup(
@@ -1689,7 +1679,7 @@ def streamed_incremental_neardup(
     _banded_sigs(seed_sigs, bands, num_perm // bands).write.mode(
         "overwrite"
     ).parquet(f"{sig_index_path}_bands/batch_id=-1")
-    _free_local_checkpoint(seed_sigs)
+    free_checkpoint(seed_sigs)
 
     def merge(b: DataFrame, batch_id: int) -> None:
         neardup_batch_against_index(
@@ -1746,7 +1736,6 @@ def embedding_neardup_batch_against_index(
     n_tables: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bucket_index_path: str | None = None,
     max_batch_edges: int = 1_000_000,
 ) -> None:
     """Merge one micro-batch into a growing EMBEDDING near-dup-deduplicated
@@ -1759,8 +1748,8 @@ def embedding_neardup_batch_against_index(
 
     Index layout mirrors the MinHash variant: (did, vec) at
     ``vec_index_path`` for exact verification plus the PRE-BUCKETED
-    (did, tbl, bucket) rows at ``bucket_index_path`` (default
-    ``vec_index_path + "_buckets"``), both appended as ``batch_id=N``
+    (did, tbl, bucket) rows at ``vec_index_path + "_buckets"``, both
+    seeded before the first batch and appended as ``batch_id=N``
     partitions (overwrite per partition = replay idempotency). Each
     batch buckets ONLY its own vectors; the probe is an equi-join
     against the stored buckets; accepted vectors are re-read only for
@@ -1774,8 +1763,7 @@ def embedding_neardup_batch_against_index(
     from ..operators.similarity import lsh_bucket_table
 
     spark = batch.sparkSession
-    if bucket_index_path is None:
-        bucket_index_path = vec_index_path + "_buckets"
+    bucket_index_path = vec_index_path + "_buckets"
     vecs = (
         batch.select(F.col(id_col).alias("did"), F.col(vec_col).alias("vec"))
         .localCheckpoint(eager=True)
@@ -1788,16 +1776,9 @@ def embedding_neardup_batch_against_index(
     survivors = vecs
     if idx is not None:
         idx = idx.filter(F.col("batch_id") < batch_id)  # replay safety
-        idx_buckets = _read_index_or_none(spark, bucket_index_path)
-        if idx_buckets is not None:
-            idx_buckets = idx_buckets.filter(
-                F.col("batch_id") < batch_id
-            ).select(F.col("did").alias("id_b"), "tbl", "bucket")
-        else:
-            idx_buckets = lsh_bucket_table(
-                idx.select("did", "vec"), dim, n_planes, n_tables,
-                id_col="did", vec_col="vec",
-            ).withColumnRenamed("did", "id_b")
+        idx_buckets = spark.read.parquet(bucket_index_path).filter(
+            F.col("batch_id") < batch_id
+        ).select(F.col("did").alias("id_b"), "tbl", "bucket")
         cand = (
             my_buckets.withColumnRenamed("did", "id_a")
             .join(idx_buckets, ["tbl", "bucket"])
@@ -1865,7 +1846,7 @@ def embedding_neardup_batch_against_index(
     ).parquet(f"{bucket_index_path}/batch_id={batch_id}")
     # free this batch's checkpoints (see neardup_batch_against_index)
     for df_ in (accepted, survivors, my_buckets, vecs):
-        _free_local_checkpoint(df_)
+        free_checkpoint(df_)
 
 
 def streamed_incremental_embedding_neardup(
@@ -1906,7 +1887,7 @@ def streamed_incremental_embedding_neardup(
     lsh_bucket_table(
         seed, dim, n_planes, id_col="did", vec_col="vec"
     ).write.mode("overwrite").parquet(f"{vec_index_path}_buckets/batch_id=-1")
-    _free_local_checkpoint(seed)
+    free_checkpoint(seed)
 
     def merge(b: DataFrame, batch_id: int) -> None:
         embedding_neardup_batch_against_index(
@@ -1974,7 +1955,7 @@ def cdc_batch_against_store(
         F.sum("dups").alias("n"), F.sum(F.col("dups") * F.col("clen")).alias("c")
     ).first()
     if not tot["n"]:
-        _free_local_checkpoint(mine)
+        free_checkpoint(mine)
         return None
     idx = _read_index_or_none(spark, chunk_index_path)
     new = mine
@@ -1989,8 +1970,8 @@ def cdc_batch_against_store(
     new.select("h", "clen").write.mode("overwrite").parquet(
         f"{chunk_index_path}/batch_id={batch_id}"
     )
-    _free_local_checkpoint(new)  # free this batch's checkpoint blocks
-    _free_local_checkpoint(mine)
+    free_checkpoint(new)  # free this batch's checkpoint blocks
+    free_checkpoint(mine)
     return (int(tot["n"]), int(ns["n"] or 0), int(tot["c"]), int(ns["c"] or 0))
 
 

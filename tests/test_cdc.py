@@ -149,7 +149,7 @@ def test_stream_build_frees_checkpoint_blocks(spark, tmp_path):
     """Regression for the round-5 review finding: DataFrame.unpersist()
     is a CacheManager call and does NOT release localCheckpoint blocks,
     so the per-batch frees must go through the RDD-level
-    _free_local_checkpoint. A bounded run (seed + 3 batches, two
+    fixpoint.free_checkpoint. A bounded run (seed + 3 batches, two
     checkpoints each) must not leave its per-batch RDDs pinned in the
     block manager."""
     from reddit_etl_pipeline_spark.streaming import stream as st

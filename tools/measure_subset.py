@@ -5,6 +5,13 @@ methodology: warm-up, noop sink, best-of-2, clearCache isolation,
 calibration probes before/after so a steal window can't masquerade as
 a regression or a win).
 
+Each query also reports its Spark job count (one number when every rep
+agrees, else the per-rep list), read from a job group per rep
+(``statusTracker().getJobIdsForGroup``). Unlike wall time the count is
+noise-free: equal counts before and after a refactor are the check that
+it kept the query's plans. A stream twin's micro-batch jobs run under
+the stream's own job group and are not in its count.
+
 Usage: python tools/measure_subset.py q1,q2,... [reps]
 """
 
@@ -49,13 +56,25 @@ def main() -> None:
     queries = entrymod.queries()
     bench.warm_probe(spark)
     pb = bench.calibration_probe(spark)
-    timings = bench._time_queries(spark, queries, names, reps)
+    sc = spark.sparkContext
+    timings, jobs = {}, {}
+    for name in names:
+        best, counts = float("inf"), []
+        for rep in range(reps):
+            group = f"measure_subset:{name}:{rep}"
+            sc.setJobGroup(group, name)
+            best = min(best, bench._time_queries(spark, queries, [name], 1)[name])
+            sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        timings[name] = best
+        jobs[name] = counts[0] if len(set(counts)) == 1 else counts
     pa = bench.calibration_probe(spark)
     print(json.dumps({
         "probes": [pb, pa],
         "floor": bench.PROBE_FLOOR_S,
         "clean": max(pb, pa) <= 2 * bench.PROBE_FLOOR_S,
         "queries": timings,
+        "jobs": jobs,
     }))
     spark.stop()
 
