@@ -102,13 +102,6 @@ def add_date_parts(df: DataFrame, col: str = "created_utc") -> DataFrame:
     )
 
 
-def engagement_score_col() -> F.Column:
-    """score + num_comments * 2 (extract-from-reddit.py:155, commented)."""
-    return (F.col("score") + F.col("num_comments") * F.lit(2)).alias(
-        "engagement_score"
-    )
-
-
 def add_engagement(df: DataFrame) -> DataFrame:
     """Designed derivations † (extract-from-reddit.py:153-162): engagement
     score + right-closed bucket labels Low/Medium/High/Viral."""

@@ -81,6 +81,11 @@ __all__ = [
 #: slicing the streaming CC fold uses)
 N_BATCHES = 8
 
+#: partial layouts, pinned on read: a store whose every partial was
+#: empty (an edgeless slice) holds no file to infer a schema from
+EDGE_SCHEMA = "lo bigint, hi bigint, batch_id int"
+DEGREE_SCHEMA = "node bigint, deg bigint, batch_id int"
+
 
 def slice_edges(
     lineitem: DataFrame,
@@ -197,7 +202,7 @@ def store_edges(
     re-distinct shuffle, no re-materialization: the parquet files ARE
     the materialization). Partition pruning on batch_id remains
     available for audits/selective rebuilds."""
-    return spark.read.parquet(f"{store_dir}/edges").select(
+    return spark.read.schema(EDGE_SCHEMA).parquet(f"{store_dir}/edges").select(
         F.col("lo").alias(src), F.col("hi").alias(dst)
     )
 
@@ -209,7 +214,8 @@ def store_degrees(spark: SparkSession, store_dir: str) -> DataFrame:
     map-side-combinable aggregate over node-cardinality partials; the
     edge relation is never touched."""
     return (
-        spark.read.parquet(f"{store_dir}/degrees")
+        spark.read.schema(DEGREE_SCHEMA)
+        .parquet(f"{store_dir}/degrees")
         .groupBy("node")
         .agg(F.sum("deg").alias("deg"))
     )

@@ -154,9 +154,11 @@ def store_signatures(
     """The merged signature relation (id, signature) — the union of
     per-batch partials, rebalanced to full parallelism (the stored
     files are one per batch; an unsplit scan would run the band
-    self-join on a handful of tasks)."""
+    self-join on a handful of tasks). The partial schema is pinned: a
+    store whose every batch was empty holds no file to infer it from."""
     return (
-        spark.read.parquet(f"{store_dir}/signatures")
+        spark.read.schema(f"{id_col} bigint, signature array<bigint>, batch_id int")
+        .parquet(f"{store_dir}/signatures")
         .select(id_col, "signature")
         .repartition(spark.sparkContext.defaultParallelism)
     )

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.transforms import transform_posts
 from ..operators.quality import assert_not_null, assert_unique, summary_stats, total_nulls
 from ..operators.upsert import upsert_anti_join
-from ..sources.lake import read_table, with_batch_date, write_table
+from ..sources.lake import read_table, swap_state, with_batch_date, write_table
 from ..sources.reddit_api import fetch_posts_df
 from . import models as M
 
@@ -170,30 +170,17 @@ def _upsert_warehouse(spark: SparkSession, batch: DataFrame, warehouse_path: str
     object store). Shared by the one-program daily batch and the staged
     DAG task (``stage_load_warehouse``)."""
     import os
-    import shutil
 
-    old = warehouse_path.rstrip("/") + "__old"
-    if os.path.exists(old) and not os.path.exists(warehouse_path):
-        # crash recovery: a previous run died mid-swap; restore the
-        # stranded warehouse rather than silently restarting history
-        shutil.move(old, warehouse_path)
-    elif os.path.exists(old):
-        shutil.rmtree(old)  # stale leftover from a crash after the swap
-    # explicit existence check: a CORRUPT warehouse must raise on read,
-    # not be mistaken for first-run and overwritten with one day's batch
-    if os.path.exists(warehouse_path):
-        main = spark.read.parquet(warehouse_path)
-        merged = upsert_anti_join(main, batch)
-        # parquet can't overwrite its own input in place: write the merge
-        # once to a staging dir, then swap directories — one full write
-        # instead of two
-        tmp = warehouse_path.rstrip("/") + "__staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.move(warehouse_path, old)
-        shutil.move(tmp, warehouse_path)
-        shutil.rmtree(old)
-    else:
-        batch.write.mode("overwrite").parquet(warehouse_path)
+    def write(dst: str) -> None:
+        merged = batch
+        # explicit existence check: a CORRUPT warehouse must raise on
+        # read, not be mistaken for first-run and overwritten with one
+        # day's batch
+        if os.path.exists(warehouse_path):
+            merged = upsert_anti_join(spark.read.parquet(warehouse_path), batch)
+        merged.write.mode("overwrite").parquet(dst)
+
+    swap_state(warehouse_path, write)
 
 
 # ------------------------------------------------------------- staged DAG

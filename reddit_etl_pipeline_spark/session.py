@@ -21,6 +21,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 32g. The heap shares
+    the host with the Python workers and the OS; a fixed 32g on a 15 GB
+    host let the JVM die mid-query (py4j "Answer from Java side is
+    empty" in an sf0.1 neardup_canonical run)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(32, phys // 2 // 1024**3))}g"
+
+
 def get_spark(
     app_name: str = "reddit_etl_pipeline_spark",
     master: str | None = None,
@@ -48,7 +57,10 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     # State store backend for Structured Streaming. Default = HDFS-backed
     # (JVM heap + checkpoint files): measured equal-or-faster on bounded

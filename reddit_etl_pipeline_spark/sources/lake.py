@@ -14,8 +14,13 @@ At 100 TB: one directory per day, each day internally split by Spark into
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import TypeVar
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+T = TypeVar("T")
 
 BATCH_DATE_COL = "batch_date"
 
@@ -64,9 +69,8 @@ def write_meta_table(rows: list[tuple], schema_ddl: str, path: str) -> None:
     reads back the identical schema (BIGINT/INT/DOUBLE/array<double>
     columns round-trip exactly — all store metadata is integer-valued).
     Overwrite semantics match ``mode("overwrite")``: the directory is
-    replaced atomically enough for a single-writer store init."""
+    replaced through ``swap_state``."""
     import os
-    import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -89,14 +93,48 @@ def write_meta_table(rows: list[tuple], schema_ddl: str, path: str) -> None:
     tb = pa.table(
         [pa.array(list(c), f.type) for c, f in zip(cols, sch)], schema=sch
     )
-    tmp = f"{path}._tmp_meta"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    pq.write_table(tb, os.path.join(tmp, "part-00000.parquet"))
+
+    def write(dst: str) -> None:
+        os.makedirs(dst)
+        pq.write_table(tb, os.path.join(dst, "part-00000.parquet"))
+
+    swap_state(path, write)
+
+
+def swap_state(path: str, write: Callable[[str], T]) -> T:
+    """The one crash-safe rewrite of a table directory: ``write(dst)``
+    writes the table's next version to ``dst`` (reading the current
+    version at ``path`` itself when it needs it — parquet cannot
+    overwrite its own input), then two renames swap it in. In order:
+
+    1. a ``path__old`` stranded by a crash between the two renames is
+       restored when ``path`` is missing — never restart from nothing;
+    2. a stale ``path__old`` or half-written ``path__next`` is removed;
+    3. ``write(path__next)``, after recovery, so it reads the live table;
+    4. ``path`` -> ``path__old`` when ``path`` exists;
+    5. ``path__next`` -> ``path``, then ``path__old`` is removed.
+
+    Both renames stay inside the table's parent directory, so each is
+    atomic or fails loudly (a staging dir elsewhere would turn the move
+    into copy + delete on another filesystem, and a crash mid-copy into
+    a partial table). At every instant a complete table exists at
+    ``path`` or ``path__old``. Returns what ``write`` returns."""
+    import os
+    import shutil
+
+    path = path.rstrip("/")
+    old, nxt = f"{path}__old", f"{path}__next"
+    if os.path.exists(old) and not os.path.exists(path):
+        os.replace(old, path)
+    for stale in (old, nxt):
+        if os.path.exists(stale):
+            shutil.rmtree(stale)
+    out = write(nxt)
     if os.path.exists(path):
-        shutil.rmtree(path)
-    os.replace(tmp, path)
+        os.replace(path, old)
+    os.replace(nxt, path)
+    shutil.rmtree(old, ignore_errors=True)
+    return out
 
 
 def read_table(
@@ -143,48 +181,36 @@ def compact_table(
     Daily upserts and streaming sinks accrete small files; at 100 TB the
     scan cost is dominated by file-open overhead once files are << 128 MB.
     Sizes the output file count from the on-disk bytes (cheap driver-side
-    listing), rewrites via repartition, and atomically swaps directories.
+    listing), rewrites via repartition, and swaps via ``swap_state``.
     Returns the number of output files requested."""
     import math
     import os
-    import shutil
 
-    old = f"{path}__old"
-    tmp = f"{path}__compacting"
-    # crash recovery (same pattern as plans/pipeline.py run_daily_batch):
-    # a previous compaction that died between the two moves leaves the
-    # table stranded at __old — restore it; any other leftover __old or
-    # half-written __compacting output is stale and must be cleared.
-    if os.path.exists(old) and not os.path.exists(path):
-        shutil.move(old, path)
-    elif os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
+    def write(dst: str) -> int:
+        total = 0
+        for root, _dirs, files in os.walk(path):
+            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
+        n_files = max(1, math.ceil(total / target_file_bytes))
+        df = spark.read.parquet(path)
+        parts = partition_by
+        if parts is None:
+            parts = [BATCH_DATE_COL] if BATCH_DATE_COL in df.columns else []
+        if parts:
+            # hash-cluster on the partition columns so each task holds
+            # whole partition values -> one output file per value
+            # (round-robin repartition would spread every value over
+            # every task and write up to n_files files PER value — more
+            # small files, not fewer)
+            out = df.repartition(n_files, *[F.col(c) for c in parts])
+        else:
+            out = df.repartition(n_files)
+        writer = out.write.mode("overwrite")
+        if parts:
+            writer = writer.partitionBy(*parts)
+        writer.parquet(dst)
+        return n_files
 
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    if partition_by is None:
-        partition_by = [BATCH_DATE_COL] if BATCH_DATE_COL in df.columns else []
-    if partition_by:
-        # hash-cluster on the partition columns so each task holds whole
-        # partition values -> one output file per value (round-robin
-        # repartition would spread every value over every task and write
-        # up to n_files files PER value — more small files, not fewer)
-        out = df.repartition(n_files, *[F.col(c) for c in partition_by])
-    else:
-        out = df.repartition(n_files)
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
-    return n_files
+    return swap_state(path, write)
 
 
 def with_batch_date(df: DataFrame, batch_date: str | None = None) -> DataFrame:

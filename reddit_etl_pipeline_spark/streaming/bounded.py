@@ -203,6 +203,45 @@ def stage_sliced_stream(
     return _file_stream(df.sparkSession, df.schema, stream_dir)
 
 
+def _run(writer, state_partitions: int | None, available_now: bool) -> None:
+    """The one start / await / stop of a bounded stream: every drain in
+    the package reaches Spark through here. ``state_partitions``
+    overrides shuffle partitions for the run (restored afterwards);
+    ``available_now`` drains via ``Trigger.AvailableNow`` and awaits
+    termination instead of calling ``processAllAvailable``."""
+    conf = SparkSession.active().conf
+    prev = conf.get("spark.sql.shuffle.partitions")
+    if state_partitions is not None:
+        conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    try:
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        q = writer.start()
+        try:
+            if available_now:
+                q.awaitTermination()
+            else:
+                q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def drain(stream: DataFrame, fn, state_partitions: int | None = None) -> None:
+    """Fold a bounded stream to completion through ``foreachBatch(fn)``
+    (checkpointed, so a replayed micro-batch reaches ``fn`` with its
+    original batch id). ``state_partitions``: as in
+    ``run_stream_to_batch``; None leaves the session's count."""
+    _run(
+        stream.writeStream.foreachBatch(fn).option(
+            "checkpointLocation", scratch_dir("fold_chk_")
+        ),
+        state_partitions,
+        available_now=False,
+    )
+
+
 def run_stream_to_batch(
     agg: DataFrame,
     spark: SparkSession,
@@ -231,49 +270,22 @@ def run_stream_to_batch(
     maxFilesPerTrigger as rate limit, then STOP on its own): the query is
     awaited to termination instead of processAllAvailable+stop. Same
     results; use it for scheduled incremental runs over a growing source.
+    Both sinks take the trigger: without it the default trigger never
+    terminates and the await would hang on a bounded source.
     """
-    use_file_sink = output_mode == "append" and not debug
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        if use_file_sink:
-            out_dir = scratch_dir("stream_sink_")
-            chk = scratch_dir("stream_chk_")
-            w = (
-                agg.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", chk)
-            )
-            if available_now:
-                w = w.trigger(availableNow=True)
-            q = w.start()
-        else:
-            name = f"stream_out_{uuid.uuid4().hex[:8]}"
-            w = (
-                agg.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(name)
-            )
-            # availableNow must reach the memory sink too: without it the
-            # default trigger never terminates and awaitTermination() below
-            # would hang forever on a bounded source.
-            if available_now:
-                w = w.trigger(availableNow=True)
-            q = w.start()
-        try:
-            if available_now:
-                q.awaitTermination()
-            else:
-                q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if use_file_sink:
+    w = agg.writeStream.outputMode(output_mode)
+    if output_mode == "append" and not debug:
+        out_dir = scratch_dir("stream_sink_")
+        w = (
+            w.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", scratch_dir("stream_chk_"))
+        )
+        _run(w, state_partitions, available_now)
         # schema pinned from the plan: an all-late run can leave zero files
         return spark.read.schema(agg.schema).parquet(out_dir)
+    name = f"stream_out_{uuid.uuid4().hex[:8]}"
+    _run(w.format("memory").queryName(name), state_partitions, available_now)
     out = spark.table(name)
     rows = out.collect()  # materialize before the in-memory table goes away
     return spark.createDataFrame(rows, out.schema)

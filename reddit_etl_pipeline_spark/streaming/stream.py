@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .bounded import (  # noqa: F401
+    drain,
     resolve_slices,
     run_stream_to_batch,
     scratch_dir,
@@ -26,6 +27,7 @@ from .bounded import (  # noqa: F401
     stage_sliced_stream,
 )
 from ..operators.fixpoint import free_checkpoint
+from ..sources.lake import swap_state
 
 
 def _read_index_or_none(spark: SparkSession, path: str) -> DataFrame | None:
@@ -185,6 +187,26 @@ def _event_sentinel_table(src_path: str, sentinel_ts):
     return pa.Table.from_arrays(vals, schema=pa.schema(fields))
 
 
+def _sentinel_ts(batch: DataFrame, margin_seconds: int):
+    """(sentinel time, ns_ts) for a bounded events stream: the sentinel
+    sits ``margin_seconds`` past max(ts), as integer nanos when ts reads
+    as bigint under ``nanosAsLong`` (ns_ts) and as a datetime otherwise.
+    A zero-row source has no window or session to close, so any fixed
+    time is exact there: the margin counts from the epoch."""
+    import datetime
+
+    ns_ts = any(
+        f.name == "ts" and f.dataType.simpleString() == "bigint"
+        for f in batch.schema.fields
+    )
+    max_ts = batch.agg(F.max("ts")).first()[0]
+    if max_ts is None:
+        max_ts = 0 if ns_ts else datetime.datetime(1970, 1, 1)
+    if ns_ts:
+        return max_ts + margin_seconds * 1_000_000_000, ns_ts
+    return max_ts + datetime.timedelta(seconds=margin_seconds), ns_ts
+
+
 def _bounded_events_stream(
     spark: SparkSession, sf_dir: str, margin_seconds: int
 ):
@@ -216,17 +238,7 @@ def _bounded_events_stream(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ns_ts = any(
-        f.name == "ts" and f.dataType.simpleString() == "bigint"
-        for f in batch.schema.fields
-    )
-    max_ts = batch.agg(F.max("ts")).first()[0]
-    if ns_ts:
-        sentinel_ts = max_ts + margin_seconds * 1_000_000_000
-    else:
-        import datetime
-
-        sentinel_ts = max_ts + datetime.timedelta(seconds=margin_seconds)
+    sentinel_ts, ns_ts = _sentinel_ts(batch, margin_seconds)
     src = f"{sf_dir}/events.parquet"
     sentinel = _event_sentinel_table(src, sentinel_ts)
     stream = stage_bounded_stream(
@@ -401,18 +413,14 @@ def streamed_sketch_store(
             .parquet(store)
         )
 
-    chk = scratch_dir("sketch_store_chk_")
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream, ingest)
+    # partial schema pinned: all-empty batches leave no file to infer from
     regs = (
-        spark.read.parquet(store)
+        spark.read.schema(
+            "batch_date string, event_type string, reg bigint, rho_max int,"
+            " ingest_batch int"
+        )
+        .parquet(store)
         .groupBy("event_type", "reg")
         .agg(F.max("rho_max").alias("rho_max"))
     )
@@ -501,18 +509,14 @@ def streamed_domain_rollup(
             .parquet(f"{store}/urls")
         )
 
-    chk = scratch_dir("domain_rollup_chk_")
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream, ingest)
+    # partial schemas pinned: all-empty batches leave no file to infer from
     add = (
-        spark.read.parquet(f"{store}/additive")
+        spark.read.schema(
+            "domain string, n_docs bigint, n_tokens bigint, q_sum bigint,"
+            " batch_id int"
+        )
+        .parquet(f"{store}/additive")
         .groupBy("domain")
         .agg(
             F.sum("n_docs").alias("n_docs"),
@@ -521,7 +525,8 @@ def streamed_domain_rollup(
         )
     )
     urls = (
-        spark.read.parquet(f"{store}/urls")
+        spark.read.schema("domain string, curl string, batch_id int")
+        .parquet(f"{store}/urls")
         .groupBy("domain")
         .agg(F.count(F.lit(1)).alias("n_urls"))
     )
@@ -577,16 +582,7 @@ def streamed_graph_store(
     def ingest(b: DataFrame, batch_id: int) -> None:
         GST.append_batch(b, store, batch_id=batch_id)
 
-    chk = scratch_dir("graph_store_chk_")
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream, ingest)
     cc = connected_components(
         GST.store_edges(spark, store), src="src", dst="dst",
         pre_normalized=True,
@@ -630,16 +626,7 @@ def streamed_ann_store(
     def ingest(b: DataFrame, batch_id: int) -> None:
         ANS.append_batch(b, store, batch_id=batch_id, cents=cents)
 
-    chk = scratch_dir("ann_store_chk_")
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream, ingest)
     return ANS.store_topk(
         spark, store, emb, emb.filter(F.col("vec_id") < 5), k=k
     )
@@ -682,16 +669,7 @@ def streamed_minhash_store(
     def ingest(b: DataFrame, batch_id: int) -> None:
         NS.append_batch(b, store, batch_id=batch_id)
 
-    chk = scratch_dir("minhash_store_chk_")
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream, ingest)
     return NS.store_pairs(spark, store, threshold=threshold)
 
 
@@ -723,54 +701,28 @@ def streamed_kmv_distinct(
     state_path = scratch_dir("kmv_state_") + "/state"
 
     def merge(b: DataFrame, _batch_id: int) -> None:
-        import os
-        import shutil
+        def write(dst: str) -> None:
+            fresh = SK.kmv_bottomk(b, "event_type", "xxhash64(user_id)", k=k)
+            old = _read_index_or_none(spark, state_path)
+            if old is not None:
+                # re-flipping a flipped value is wrong — old state is
+                # already in flipped space, so merge in that space directly
+                from pyspark.sql import Window
 
-        old_dir = state_path + "__old"
-        # crash recovery (the _upsert_warehouse swap discipline): a
-        # previous merge died between the moves — restore the stranded
-        # state instead of silently restarting from this batch alone
-        if os.path.exists(old_dir) and not os.path.exists(state_path):
-            shutil.move(old_dir, state_path)
-        elif os.path.exists(old_dir):
-            shutil.rmtree(old_dir)
-        fresh = SK.kmv_bottomk(
-            b, "event_type", "xxhash64(user_id)", k=k
-        )
-        old = _read_index_or_none(spark, state_path)
-        if old is not None:
-            # re-flipping a flipped value is wrong — old state is
-            # already in flipped space, so merge in that space directly
-            merged = old.unionByName(fresh)
-            from pyspark.sql import Window
+                w = Window.partitionBy("event_type").orderBy("flipped")
+                fresh = (
+                    old.unionByName(fresh)
+                    .distinct()
+                    .withColumn("rn", F.row_number().over(w))
+                    .filter(F.col("rn") <= k)
+                    .select("event_type", "flipped")
+                )
+            # the state is ≤ types×k rows: rewrite whole, one file
+            fresh.coalesce(1).write.mode("overwrite").parquet(dst)
 
-            w = Window.partitionBy("event_type").orderBy("flipped")
-            fresh = (
-                merged.distinct()
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= k)
-                .select("event_type", "flipped")
-            )
-        # the state is ≤ types×k rows: rewrite whole, one file, then a
-        # two-move swap so no crash window leaves zero copies on disk
-        fresh.coalesce(1).write.mode("overwrite").parquet(
-            state_path + "__next"
-        )
-        if os.path.exists(state_path):
-            shutil.move(state_path, old_dir)
-        shutil.move(state_path + "__next", state_path)
-        shutil.rmtree(old_dir, ignore_errors=True)
+        swap_state(state_path, write)
 
-    chk = scratch_dir("kmv_chk_")
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream, merge)
     return SK.kmv_estimate(
         spark.read.parquet(state_path), "event_type", k=k
     )
@@ -864,18 +816,7 @@ def streamed_purchase_click_join(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ns_ts = any(
-        f.name == "ts" and f.dataType.simpleString() == "bigint"
-        for f in batch.schema.fields
-    )
-    max_ts = batch.agg(F.max("ts")).first()[0]
-    if ns_ts:
-        sentinel_ts = max_ts + (window_seconds + 7200) * 1_000_000_000
-    else:
-        # real timestamp column: max_ts is a datetime, advance via timedelta
-        import datetime
-
-        sentinel_ts = max_ts + datetime.timedelta(seconds=window_seconds + 7200)
+    sentinel_ts, _ = _sentinel_ts(batch, window_seconds + 7200)
 
     # one-row pyarrow sentinel shared by both sides — no Spark write jobs
     # (the _bounded_events_stream optimization; this family staged FOUR
@@ -1182,7 +1123,7 @@ def merge_latest_into_warehouse(
 ) -> None:
     """Idempotent last-write-wins merge of one micro-batch into a parquet
     warehouse table: read current table, union the batch, keep max_by
-    (order_cols) per key group, atomically swap directories.
+    (order_cols) per key group, swap it in via ``lake.swap_state``.
 
     This is the ``foreachBatch`` MERGE pattern for sinks without native
     upsert. The order key is EVENT data (ts, event_id), not arrival
@@ -1194,39 +1135,24 @@ def merge_latest_into_warehouse(
     an id-bucketed layout makes the merge shuffle-free on the main side
     (operators/upsert.upsert_bucketed shows that layout).
     """
-    import os
-    import shutil
-    import tempfile
-
     spark = batch.sparkSession
-    # crash recovery (same pattern as plans/pipeline.py and
-    # lake.compact_table): a crash between the two moves below leaves the
-    # table only at __old — restore it before merging, and clear a stale
-    # __old left after a successful swap's failed cleanup
-    old = f"{warehouse_path}__old"
-    if os.path.exists(old):
-        if not os.path.exists(warehouse_path):
-            os.replace(old, warehouse_path)
-        else:
-            shutil.rmtree(old, ignore_errors=True)
-    merged = batch
-    if os.path.exists(warehouse_path):
-        current = spark.read.parquet(warehouse_path)
-        merged = current.unionByName(batch)
-    rank = F.struct(*[F.col(c) for c in order_cols]).alias("__rank")
-    row = F.struct(*[F.col(c) for c in merged.columns]).alias("__row")
-    latest = (
-        merged.select(*[F.col(k) for k in keys], rank, row)
-        .groupBy(*keys)
-        .agg(F.max_by("__row", "__rank").alias("__row"))
-        .select(*[F.col(f"__row.{c}").alias(c) for c in merged.columns])
-    )
-    tmp = tempfile.mkdtemp(prefix="wh_merge_")
-    latest.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(warehouse_path):
-        os.replace(warehouse_path, old)
-    shutil.move(tmp, warehouse_path)
-    shutil.rmtree(old, ignore_errors=True)
+
+    def write(dst: str) -> None:
+        merged = batch
+        if os.path.exists(warehouse_path):
+            merged = spark.read.parquet(warehouse_path).unionByName(batch)
+        rank = F.struct(*[F.col(c) for c in order_cols]).alias("__rank")
+        row = F.struct(*[F.col(c) for c in merged.columns]).alias("__row")
+        (
+            merged.select(*[F.col(k) for k in keys], rank, row)
+            .groupBy(*keys)
+            .agg(F.max_by("__row", "__rank").alias("__row"))
+            .select(*[F.col(f"__row.{c}").alias(c) for c in merged.columns])
+            .write.mode("overwrite")
+            .parquet(dst)
+        )
+
+    swap_state(warehouse_path, write)
 
 
 def streamed_upsert_latest(
@@ -1262,21 +1188,7 @@ def streamed_upsert_latest(
             order_cols=["ts", "event_id"],
         )
 
-    chk = scratch_dir("upsert_chk_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", chk)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(stream, merge, state_partitions=8)
     out = spark.read.parquet(warehouse)
     return out.select(
         "user_id",
@@ -1404,7 +1316,7 @@ def streamed_incremental_dedup(
         dedup_batch_against_index(b, batch_id, index_path, accepted_path)
 
     if not _drain_id_sliced_stream(
-        spark, new, "doc_id", n_slices, "inc_dedup_", merge
+        new, "doc_id", n_slices, "inc_dedup_", merge
     ):
         # no candidate docs at all: nothing to stream, nothing accepted
         return spark.createDataFrame([], "doc_id long")
@@ -1412,7 +1324,6 @@ def streamed_incremental_dedup(
 
 
 def _drain_id_sliced_stream(
-    spark: SparkSession,
     new: DataFrame,
     id_col: str,
     n_slices: int,
@@ -1441,21 +1352,7 @@ def _drain_id_sliced_stream(
         new, F.expr(f"{id_col} div {chunk}"), n_slices,
         prefix=f"{prefix}stream_",
     )
-    chk = scratch_dir(f"{prefix}chk_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", chk)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(stream, merge, state_partitions=8)
     return True
 
 
@@ -1687,7 +1584,7 @@ def streamed_incremental_neardup(
         )
 
     if not _drain_id_sliced_stream(
-        spark, new, "doc_id", n_slices, "inc_neardup_", merge
+        new, "doc_id", n_slices, "inc_neardup_", merge
     ):
         return spark.createDataFrame([], "doc_id long")
     return spark.read.parquet(accepted_path).select("doc_id")
@@ -1896,7 +1793,7 @@ def streamed_incremental_embedding_neardup(
         )
 
     if not _drain_id_sliced_stream(
-        spark, new, "vec_id", n_slices, "inc_embdup_", merge
+        new, "vec_id", n_slices, "inc_embdup_", merge
     ):
         return spark.createDataFrame([], "vec_id long")
     return spark.read.parquet(accepted_path).select("vec_id")
@@ -2018,7 +1915,7 @@ def streamed_bm25_doc_search(
         b.select("doc_id").write.mode("append").parquet(ids_path)
 
     if not _drain_id_sliced_stream(
-        spark, docs, "doc_id", n_slices, "bm25_index_", merge
+        docs, "doc_id", n_slices, "bm25_index_", merge
     ):
         return spark.createDataFrame(
             [], "query_id long, doc_id long, score_micro long, rank long"
@@ -2087,7 +1984,7 @@ def streamed_cdc_chunk_store(
         if r is not None:
             ledger[batch_id] = r
 
-    _drain_id_sliced_stream(spark, new, "doc_id", n_slices, "cdc_store_", merge)
+    _drain_id_sliced_stream(new, "doc_id", n_slices, "cdc_store_", merge)
     return _ledger_df()
 
 
@@ -2293,14 +2190,11 @@ def streamed_part_components(
     Scale: state is node-cardinality (|parts|, two BIGINTs per row —
     never edges, which at 100 TB dwarf the node set); per batch the CC
     loop runs O(diameter of NEW structure) rounds because prior
-    components are already depth-1 stars. State swaps through the
-    two-move crash-safe rewrite (the kmv/upsert discipline). Returns
+    components are already depth-1 stars. State swaps through
+    ``lake.swap_state``, like the kmv and upsert states. Returns
     (part_id, component_id, component_size).
     """
     n_slices = resolve_slices(n_slices, 3)
-    import os
-    import shutil
-
     from ..operators.dedup import connected_components
     from ..plans.star import load
 
@@ -2311,11 +2205,6 @@ def streamed_part_components(
     state_path = scratch_dir("cc_state_") + "/state"
 
     def merge(b: DataFrame, _batch_id: int) -> None:
-        old_dir = state_path + "__old"
-        if os.path.exists(old_dir) and not os.path.exists(state_path):
-            shutil.move(old_dir, state_path)  # crash between the moves
-        elif os.path.exists(old_dir):
-            shutil.rmtree(old_dir)
         lo = b.select("l_orderkey", "l_partkey").distinct()
         a, c = lo.alias("a"), lo.alias("b")
         new_edges = (
@@ -2330,34 +2219,25 @@ def streamed_part_components(
             )
             .distinct()
         )
-        old = _read_index_or_none(spark, state_path)
-        edges = (
-            new_edges
-            if old is None
-            else new_edges.unionByName(
-                old.select(
-                    F.col("node").alias("src"),
-                    F.col("component").alias("dst"),
+
+        def write(dst: str) -> None:
+            old = _read_index_or_none(spark, state_path)
+            edges = (
+                new_edges
+                if old is None
+                else new_edges.unionByName(
+                    old.select(
+                        F.col("node").alias("src"),
+                        F.col("component").alias("dst"),
+                    )
                 )
             )
-        )
-        cc = connected_components(edges, src="src", dst="dst")
-        cc.write.mode("overwrite").parquet(state_path + "__next")
-        if os.path.exists(state_path):
-            shutil.move(state_path, old_dir)
-        shutil.move(state_path + "__next", state_path)
-        shutil.rmtree(old_dir, ignore_errors=True)
+            cc = connected_components(edges, src="src", dst="dst")
+            cc.write.mode("overwrite").parquet(dst)
 
-    chk = scratch_dir("cc_chk_")
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+        swap_state(state_path, write)
+
+    drain(stream, merge)
     state = spark.read.parquet(state_path)
     sizes = state.groupBy("component").agg(
         F.count(F.lit(1)).alias("component_size")

@@ -30,13 +30,13 @@ def test_compact_recovers_from_crash_mid_swap(spark):
     path = f"{d}/t"
     spark.range(500).repartition(4).write.parquet(path)
     # simulate a crash between the two moves: table stranded at __old,
-    # plus a half-written __compacting directory left behind
+    # plus a half-written __next directory left behind
     shutil.move(path, f"{path}__old")
-    os.makedirs(f"{path}__compacting")
+    os.makedirs(f"{path}__next")
     compact_table(spark, path, target_file_bytes=10 * 1024 * 1024)
     assert spark.read.parquet(path).count() == 500
     assert not os.path.exists(f"{path}__old")
-    assert not os.path.exists(f"{path}__compacting")
+    assert not os.path.exists(f"{path}__next")
 
 
 def test_compact_clears_stale_old_after_completed_swap(spark):
