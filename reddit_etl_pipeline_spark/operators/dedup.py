@@ -295,22 +295,16 @@ def minhash_signatures(
     )
 
 
-def minhash_candidate_pairs(
+def minhash_bands(
     signatures: DataFrame,
-    id_col: str = "doc_id",
     bands: int = 16,
     rows_per_band: int = 4,
-    broadcast: bool = False,
+    id_col: str = "did",
 ) -> DataFrame:
-    """LSH banding: hash each band of the signature to a bucket; docs
-    sharing any (band, bucket) are candidate pairs. Pair generation is a
-    self-join per bucket — bounded by bucket occupancy, not corpus size.
-    Unrolled literal-index slices keep the banding projection in
-    whole-stage codegen (a transform() lambda is interpreted per band).
-
-    ``broadcast``: hint one side of the band self-join broadcast-able
-    (see ``minhash_pairs_from_signatures`` — the caller decides from
-    EXACT relation metadata, never from Catalyst's estimate)."""
+    """(did, band, bucket): each band of the signature hashed to a
+    bucket — the one banding projection of every MinHash pair path,
+    batch or streamed. Unrolled literal-index slices keep it in
+    whole-stage codegen (a transform() lambda is interpreted per band)."""
     bh = F.array(
         *[
             F.xxhash64(
@@ -319,20 +313,60 @@ def minhash_candidate_pairs(
             for b in range(bands)
         ]
     )
-    banded = signatures.select(
+    return signatures.select(
         F.col(id_col).alias("did"),
         F.posexplode(bh).alias("band", "bucket"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
+
+
+def bucket_self_join(
+    keys_df: DataFrame,
+    key_cols: list[str],
+    broadcast: bool = False,
+    pair_cols: tuple[str, str] = ("id_a", "id_b"),
+) -> DataFrame:
+    """The one LSH candidate generator: distinct (id_a, id_b), id_a <
+    id_b, over the ``did`` rows of ``keys_df`` that agree on every key
+    column (a MinHash (band, bucket), a hyperplane (tbl, bucket[, lvl,
+    sub])). The join carries NO payload — key and id columns only — and
+    dedupes to unique pairs at once, so a pair colliding in several
+    bands costs a few 16-byte rows, never copies of its signatures or
+    vectors (the shuffle audit in ``minhash_neardup_pairs``).
+
+    ``broadcast`` hints one side broadcast-able; the caller decides
+    from exact metadata (``minhash_pairs_from_signatures``).
+    ``pair_cols`` names the two output columns."""
+    a, b = keys_df.alias("a"), keys_df.alias("b")
+    on = F.col("a.did") < F.col("b.did")
+    for k in key_cols:
+        on = on & (F.col(f"a.{k}") == F.col(f"b.{k}"))
     return (
-        a.join(
-            F.broadcast(b) if broadcast else b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.did") < F.col("b.did")),
-        )
-        .select(F.col("a.did").alias("doc_a"), F.col("b.did").alias("doc_b"))
+        a.join(F.broadcast(b) if broadcast else b, on)
+        .select(F.col("a.did").alias(pair_cols[0]), F.col("b.did").alias(pair_cols[1]))
         .distinct()
+    )
+
+
+def minhash_candidate_pairs(
+    signatures: DataFrame,
+    id_col: str = "doc_id",
+    bands: int = 16,
+    rows_per_band: int = 4,
+    broadcast: bool = False,
+) -> DataFrame:
+    """LSH banding: hash each band of the signature to a bucket; docs
+    sharing any (band, bucket) are candidate (doc_a, doc_b) pairs. Pair
+    generation is a self-join per bucket — bounded by bucket occupancy,
+    not corpus size.
+
+    ``broadcast``: hint one side of the band self-join broadcast-able
+    (see ``minhash_pairs_from_signatures`` — the caller decides from
+    EXACT relation metadata, never from Catalyst's estimate)."""
+    return bucket_self_join(
+        minhash_bands(signatures, bands, rows_per_band, id_col),
+        ["band", "bucket"],
+        broadcast,
+        ("doc_a", "doc_b"),
     )
 
 
@@ -421,16 +455,37 @@ def minhash_pairs_from_signatures(
     sb = sigs.select(F.col(id_col).alias("doc_b"), F.col("signature").alias("sig_b"))
     if bc:
         sa, sb = F.broadcast(sa), F.broadcast(sb)
+    return minhash_verify_pairs(
+        cands, sa, sb, num_perm, threshold, ("doc_a", "doc_b")
+    )
+
+
+def minhash_verify_pairs(
+    cands: DataFrame,
+    sa: DataFrame,
+    sb: DataFrame,
+    num_perm: int,
+    threshold: float,
+    pair_cols: tuple[str, str] = ("id_a", "id_b"),
+) -> DataFrame:
+    """The one MinHash pair verifier: join each side's signature
+    (``sa`` = (id_a, sig_a), ``sb`` = (id_b, sig_b)) onto the candidate
+    pairs and keep est_jaccard = matching slots / num_perm, rounded to
+    ROUND_DP, at or above ``threshold``. Slot agreement is an UNROLLED
+    codegen sum of num_perm equality terms — no interpreted HOF lambdas
+    in the per-pair hot path (CLAUDE.md rule). ``pair_cols`` names the
+    id columns of all three inputs and of the output."""
+    a, b = pair_cols
     agree = sum(
         F.when(F.col("sig_a").getItem(i) == F.col("sig_b").getItem(i), 1).otherwise(0)
         for i in range(num_perm)
     )
     return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        cands.join(sa, a)
+        .join(sb, b)
         .select(
-            "doc_a",
-            "doc_b",
+            a,
+            b,
             F.round(agree / F.lit(num_perm), ROUND_DP).alias("est_jaccard"),
         )
         .filter(F.col("est_jaccard") >= threshold)

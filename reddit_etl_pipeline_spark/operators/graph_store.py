@@ -60,11 +60,10 @@ discipline after operators/sketch_store.py and operators/ann_store.py.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.lake import write_table
+from ..sources.lake import read_index_or_none, write_table
 
 __all__ = [
     "N_BATCHES",
@@ -180,15 +179,13 @@ def append_batch(
     re-read)."""
     spark = lineitem_batch.sparkSession
     cand = slice_edges(lineitem_batch, orderkey, partkey)
-    try:
-        others = (
-            spark.read.parquet(f"{store_dir}/edges")
-            .filter(F.col("batch_id") != batch_id)
-            .select("lo", "hi")
+    others = read_index_or_none(spark, f"{store_dir}/edges")
+    if others is not None:  # None: first append, nothing owned yet
+        cand = cand.join(
+            others.filter(F.col("batch_id") != batch_id).select("lo", "hi"),
+            ["lo", "hi"],
+            "left_anti",
         )
-        cand = cand.join(others, ["lo", "hi"], "left_anti")
-    except AnalysisException:
-        pass  # first append: nothing owned yet
     owned = cand.withColumn("batch_id", F.lit(int(batch_id)))
     _write_edge_partial(owned, store_dir)
 

@@ -39,17 +39,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-#: Canonical media relation: id + opaque bytes + typed metadata.
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("media_type", StringType(), False),  # image|audio|video
-        StructField("content", BinaryType(), True),
-        StructField("n_bytes", LongType(), True),
-        StructField("source_uri", StringType(), True),
-    ]
-)
-
 
 def attach_fake_media(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from .dedup import bucket_self_join
 from .fixpoint import free_checkpoint
 
 ROUND_DP = 6
@@ -1230,11 +1231,9 @@ def embedding_neardup_pairs(
 
     Candidate verification is an Arrow-batched mapInPandas cosine (numpy
     dot per batch) — millions of 64-dim dots per second per core, vs
-    interpreted array-expression evaluation per pair.
+    interpreted array-expression evaluation per pair
+    (``cosine_verify_pairs``).
     """
-    import numpy as np
-    import pandas as pd
-
     if n_planes is None:
         n_planes = auto_planes(df.count())
     b = lsh_bucket_table(
@@ -1245,20 +1244,24 @@ def embedding_neardup_pairs(
     if bucket_cap is not None:
         b = split_hot_buckets(b, bucket_cap, extra_bits=split_bits).drop("ext")
         key = ["tbl", "bucket", "lvl", "sub"]
-    x, y = b.alias("x"), b.alias("y")
-    on = F.col("x.did") < F.col("y.did")
-    for kcol in key:
-        on = on & (F.col(f"x.{kcol}") == F.col(f"y.{kcol}"))
-    cands = (
-        x.join(y, on)
-        .select(F.col("x.did").alias("id_a"), F.col("y.did").alias("id_b"))
-        .distinct()
-    )
+    cands = bucket_self_join(b, key)
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
-    paired = cands.join(va, "id_a").join(vb, "id_b")
+    return cosine_verify_pairs(cands, va, vb, threshold)
 
-    out_schema = "id_a long, id_b long, sim double"
+
+def cosine_verify_pairs(
+    cands: DataFrame, va: DataFrame, vb: DataFrame, threshold: float
+) -> DataFrame:
+    """The one embedding near-dup verifier: join each side's vector
+    (``va`` = (id_a, vec_a), ``vb`` = (id_b, vec_b)) onto the candidate
+    (id_a, id_b) pairs and keep (id_a, id_b, sim) with the cosine,
+    rounded to ROUND_DP, at or above ``threshold``. Arrow-batched numpy,
+    map-only after the two joins."""
+    import numpy as np
+    import pandas as pd
+
+    paired = cands.join(va, "id_a").join(vb, "id_b")
 
     def verify(batches):
         for pdf in batches:
@@ -1282,7 +1285,7 @@ def embedding_neardup_pairs(
             )
             yield out[out["sim"] >= threshold]
 
-    return paired.mapInPandas(verify, out_schema)
+    return paired.mapInPandas(verify, "id_a long, id_b long, sim double")
 
 
 def semantic_dedup(

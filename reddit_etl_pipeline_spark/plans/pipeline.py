@@ -40,7 +40,7 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     always False for object-store/HDFS URIs, which would turn a staged
     load into a silent successful no-op and let the DAG rebuild models
     over a stale warehouse (round-7 ADVICE; same failure mode
-    streaming/stream._read_index_or_none documents)."""
+    sources/lake.read_index_or_none documents)."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())

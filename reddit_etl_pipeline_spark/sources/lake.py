@@ -17,6 +17,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import TypeVar
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,6 +53,29 @@ def write_table(
         writer.option("compression", "zstd").orc(path)
     else:
         writer.parquet(path)
+
+
+def read_index_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """The one probe of a growing parquet index or ledger, through
+    Spark's reader (Hadoop FileSystem — works for file:/, s3a:/, hdfs:/
+    alike, unlike a driver-local os.path probe that silently returns
+    False for remote URIs). ONLY the first-batch no-index-yet shapes —
+    PATH_NOT_FOUND and UNABLE_TO_INFER_SCHEMA (an existing but
+    still-empty directory) — map to None; any other analysis failure
+    (mistyped URI scheme, corrupted or foreign directory) re-raises, and
+    so does a caller's later column reference into a foreign schema,
+    because treating either as 'no index' would skip the anti-join and
+    silently accept every duplicate."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        get = getattr(e, "getCondition", None) or getattr(
+            e, "getErrorClass", None
+        )
+        cond = get() if get is not None else None
+        if cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
 
 
 def write_meta_table(rows: list[tuple], schema_ddl: str, path: str) -> None:

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,28 +26,8 @@ from .bounded import (  # noqa: F401
     stage_sliced_stream,
 )
 from ..operators.fixpoint import free_checkpoint
-from ..sources.lake import swap_state
-
-
-def _read_index_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """Probe a growing parquet index through Spark's reader (Hadoop
-    FileSystem — works for file:/, s3a:/, hdfs:/ alike, unlike a
-    driver-local os.path probe that silently returns False for remote
-    URIs). ONLY the first-batch no-index-yet shapes — PATH_NOT_FOUND and
-    UNABLE_TO_INFER_SCHEMA (an existing but still-empty directory) — map
-    to None; any other analysis failure (mistyped URI scheme, corrupted
-    or foreign directory) re-raises, because treating it as 'no index'
-    would skip the anti-join and silently accept every duplicate."""
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        get = getattr(e, "getCondition", None) or getattr(
-            e, "getErrorClass", None
-        )
-        cond = get() if get is not None else None
-        if cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            return None
-        raise
+from ..plans.star import load
+from ..sources.lake import read_index_or_none, swap_state
 
 
 def _normalize_ts(df: DataFrame) -> DataFrame:
@@ -457,7 +436,7 @@ def streamed_domain_rollup(
     from ..functions.urls import canonicalize_url, url_domain
 
     n_slices = resolve_slices(n_slices, 3)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     stream = stage_sliced_stream(
         docs, F.col("doc_id") % n_slices, n_slices,
         prefix="domain_rollup_stream_",
@@ -489,15 +468,15 @@ def streamed_domain_rollup(
             .parquet(f"{store}/additive")
         )
         cand = base.select("domain", "curl").distinct()
-        try:
-            others = (
-                spark.read.parquet(f"{store}/urls")
-                .filter(F.col("batch_id") != batch_id)
-                .select("domain", "curl")
+        others = read_index_or_none(spark, f"{store}/urls")
+        if others is not None:  # None: first batch, no URLs owned yet
+            cand = cand.join(
+                others.filter(F.col("batch_id") != batch_id).select(
+                    "domain", "curl"
+                ),
+                ["domain", "curl"],
+                "left_anti",
             )
-            cand = cand.join(others, ["domain", "curl"], "left_anti")
-        except AnalysisException:
-            pass  # first batch: no URLs owned yet
         owned = cand.withColumn(
             "batch_id", F.lit(batch_id)
         ).localCheckpoint(eager=True)
@@ -570,7 +549,6 @@ def streamed_graph_store(
     n_slices = resolve_slices(n_slices, 3)
     from ..operators import graph_store as GST
     from ..operators.dedup import connected_components
-    from ..plans.star import load
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     stream = stage_sliced_stream(
@@ -617,7 +595,7 @@ def streamed_ann_store(
     n_slices = resolve_slices(n_slices, 3)
     from ..operators import ann_store as ANS
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load(spark, sf_dir, "embeddings")
     cents = ANS.init_store(emb, (store := scratch_dir("stream_ann_store_")))
     stream = stage_sliced_stream(
         emb, F.col("vec_id") % n_slices, n_slices, prefix="ann_store_stream_"
@@ -657,7 +635,6 @@ def streamed_minhash_store(
     the query side never touches text at all."""
     n_slices = resolve_slices(n_slices, 3)
     from ..operators import neardup_store as NS
-    from ..plans.star import load
 
     docs = load(spark, sf_dir, "documents")
     NS.init_store(spark, (store := scratch_dir("stream_minhash_store_")))
@@ -703,7 +680,7 @@ def streamed_kmv_distinct(
     def merge(b: DataFrame, _batch_id: int) -> None:
         def write(dst: str) -> None:
             fresh = SK.kmv_bottomk(b, "event_type", "xxhash64(user_id)", k=k)
-            old = _read_index_or_none(spark, state_path)
+            old = read_index_or_none(spark, state_path)
             if old is not None:
                 # re-flipping a flipped value is wrong — old state is
                 # already in flipped space, so merge in that space directly
@@ -776,7 +753,6 @@ def streamed_bloom_contamination(
     the batch twin's."""
     n_slices = resolve_slices(n_slices, 4)
     from ..operators import sketches as SK
-    from ..plans.star import load
 
     docs = load(spark, sf_dir, "documents")
     banned = docs.filter(F.col("doc_id") % banned_mod == 0).select(
@@ -1232,7 +1208,7 @@ def dedup_batch_against_index(
         F.col(id_col), nullable_fingerprint(text_col).alias("fp")
     )
     firsts = new_fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
-    idx = _read_index_or_none(spark, index_path)
+    idx = read_index_or_none(spark, index_path)
     if idx is not None:
         # only STRICTLY EARLIER partitions: on an at-least-once replay the
         # index already holds this batch's own fingerprints, and matching
@@ -1297,8 +1273,7 @@ def streamed_incremental_dedup(
     ingest order in production, so "first arrived" and "lowest id" agree
     there too)."""
     n_slices = resolve_slices(n_slices, 3)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id", "text")
 
@@ -1356,146 +1331,96 @@ def _drain_id_sliced_stream(
     return True
 
 
-def _banded_sigs(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """(did, band, bucket) rows from a signature table (the banding half
-    of operators/dedup.minhash_candidate_pairs, reused for cross-side
-    probe joins). Unrolled literal-index slices keep the projection in
-    whole-stage codegen (a transform() lambda is interpreted per band)."""
-    bh = F.array(
-        *[
-            F.xxhash64(
-                F.slice("signature", b * rows_per_band + 1, rows_per_band)
-            )
-            for b in range(bands)
-        ]
-    )
-    return sigs.select(
-        F.col("did"), F.posexplode(bh).alias("band", "bucket")
-    )
-
-
-def _est_jaccard_pairs(
-    pairs: DataFrame, sa: DataFrame, sb: DataFrame, num_perm: int
-) -> DataFrame:
-    """Verify candidate (id_a, id_b) pairs by signature agreement: keep
-    est_jaccard = |matching slots| / num_perm. Slot agreement is the same
-    unrolled codegen sum as dedup.minhash_neardup_pairs — zip_with/filter
-    lambdas are interpreted per element (CLAUDE.md rule), and this runs
-    per candidate pair every micro-batch."""
-    agree = sum(
-        F.when(F.col("sig_a").getItem(i) == F.col("sig_b").getItem(i), 1).otherwise(0)
-        for i in range(num_perm)
-    )
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", (agree / F.lit(num_perm)).alias("est_jaccard"))
-    )
-
-
-def neardup_batch_against_index(
-    batch: DataFrame,
-    batch_id: int,
-    sig_index_path: str,
-    accepted_path: str,
-    threshold: float = 0.5,
-    num_perm: int = 64,
-    shingle_n: int = 3,
-    bands: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_batch_edges: int = 1_000_000,
+def _write_index_batch(
+    rows: DataFrame, keys: DataFrame, index_path: str, suffix: str, batch_id: int
 ) -> None:
-    """Merge one micro-batch into a growing NEAR-dup-deduplicated corpus
-    — the MinHash analog of ``dedup_batch_against_index``: reject every
-    batch doc whose estimated Jaccard (signature agreement) against an
-    ALREADY-ACCEPTED doc reaches ``threshold``, resolve within-batch
-    near-dups greedily in id order, and extend the accepted-signature
-    index with the survivors.
-
-    Index layout: TWO sibling growing tables, both appended as
-    ``batch_id=N`` partitions (overwrite per partition = replay
-    idempotency, like the exact variant): (did, signature) at
-    ``sig_index_path`` for candidate verification, and the PRE-BANDED
-    (did, band, bucket) rows at ``sig_index_path + "_bands"`` for the
-    probe join; both tables are seeded before the first batch.
-    Persisting the banded form means each micro-batch bands ONLY its
-    own docs — without it, re-banding the whole accepted index per batch
-    makes total banding work quadratic in corpus size over a run. The probe is then
-    a plain equi-join of the batch's bands against the stored band table
-    (bounded by bucket occupancy); signature verification touches
-    candidates only; the corpus text is never rescanned.
-
-    Within-batch resolution collects the batch's VERIFIED candidate
-    edges for the greedy first-arrival policy
-    (operators/dedup.greedy_accept_order) — inherently sequential, so
-    driver-side by design and micro-batch-bounded, but guarded by
-    ``max_batch_edges``: a pathological batch (huge trigger + heavy
-    near-dup load) fails fast with sizing guidance instead of collecting
-    millions of edge rows into driver memory."""
-    from ..operators.dedup import greedy_accept_order, minhash_signatures
-
-    spark = batch.sparkSession
-    rpb = num_perm // bands
-    band_index_path = sig_index_path + "_bands"
-    sigs = (
-        minhash_signatures(batch, text_col, id_col, num_perm, shingle_n)
-        .withColumnRenamed(id_col, "did")
-        .localCheckpoint(eager=True)
+    """One ``batch_id=N`` partition of a near-dup index: the (did,
+    payload) rows at ``index_path`` and their LSH key rows at
+    ``index_path + suffix`` (overwrite per partition = replay
+    idempotency). The seed (batch -1) and every merged batch write
+    through here."""
+    rows.write.mode("overwrite").parquet(f"{index_path}/batch_id={batch_id}")
+    keys.write.mode("overwrite").parquet(
+        f"{index_path}{suffix}/batch_id={batch_id}"
     )
-    # band THIS batch once; reused for the index probe, the within-batch
-    # self-join, and the persisted band partition
-    my_bands = _banded_sigs(sigs, bands, rpb).localCheckpoint(eager=True)
-    idx = _read_index_or_none(spark, sig_index_path)
-    survivors = sigs
+
+
+def _greedy_index_merge(
+    rows: DataFrame,
+    keys_of,
+    key_cols: list[str],
+    verify,
+    batch_id: int,
+    index_path: str,
+    suffix: str,
+    accepted_path: str,
+    id_col: str,
+    max_batch_edges: int,
+    fn_name: str,
+) -> None:
+    """The one greedy merge of a micro-batch into a growing near-dup
+    index, shared by the MinHash and embedding builds. ``rows`` is the
+    batch's (did, payload) frame, ``keys_of(rows)`` its LSH key rows
+    (did, *key_cols), ``verify(cands, a, b)`` the family's pair verifier
+    over candidate (id_a, id_b) pairs and two (did, payload) sides.
+
+    Index layout: TWO sibling growing tables, both seeded before the
+    first batch and appended as ``batch_id=N`` partitions
+    (``_write_index_batch``): the (did, payload) rows at ``index_path``
+    for verification, and the PRE-KEYED rows at ``index_path + suffix``
+    for the probe join. Persisting the keys means each micro-batch keys
+    ONLY its own rows — re-keying the whole accepted index per batch
+    would make total keying work quadratic in corpus size over a run.
+    The probe is a plain equi-join of the batch's keys against the
+    stored keys (bounded by bucket occupancy); verification touches
+    candidates only; the corpus is never rescanned.
+
+    Steps: reject every batch row verified against an ALREADY-ACCEPTED
+    row of a strictly earlier batch, resolve within-batch near-dups
+    among the survivors greedily in id order
+    (operators/dedup.greedy_accept_order), then write the accepted ids,
+    rows and keys. The greedy resolution collects the batch's VERIFIED
+    within-batch edges — inherently sequential, so driver-side by
+    design and micro-batch-bounded, but guarded by ``max_batch_edges``:
+    a pathological batch (huge trigger + heavy near-dup load) fails
+    fast with sizing guidance instead of collecting millions of edge
+    rows into driver memory."""
+    from ..operators.dedup import bucket_self_join, greedy_accept_order
+
+    spark = rows.sparkSession
+    rows = rows.localCheckpoint(eager=True)
+    # key THIS batch once; reused for the index probe, the within-batch
+    # self-join, and the persisted key partition
+    keys = keys_of(rows).localCheckpoint(eager=True)
+    idx = read_index_or_none(spark, index_path)
+    survivors = rows
     if idx is not None:
         idx = idx.filter(F.col("batch_id") < batch_id)  # replay safety
-        idx_bands = spark.read.parquet(band_index_path).filter(
+        idx_keys = spark.read.parquet(index_path + suffix).filter(
             F.col("batch_id") < batch_id
-        ).select(F.col("did").alias("id_b"), "band", "bucket")
+        ).select(F.col("did").alias("id_b"), *key_cols)
         cand = (
-            my_bands.withColumnRenamed("did", "id_a")
-            .join(idx_bands, ["band", "bucket"])
+            keys.withColumnRenamed("did", "id_a")
+            .join(idx_keys, key_cols)
             .select("id_a", "id_b")
             .distinct()
         )
-        sa = sigs.select(F.col("did").alias("id_a"), F.col("signature").alias("sig_a"))
-        sb = idx.select(F.col("did").alias("id_b"), F.col("signature").alias("sig_b"))
-        dup_vs_index = (
-            _est_jaccard_pairs(cand, sa, sb, num_perm)
-            .filter(F.col("est_jaccard") >= threshold)
-            .select(F.col("id_a").alias("did"))
-            .distinct()
-        )
-        survivors = sigs.join(dup_vs_index, "did", "left_anti")
+        dup = verify(cand, rows, idx).select(F.col("id_a").alias("did")).distinct()
+        survivors = rows.join(dup, "did", "left_anti")
     survivors = survivors.localCheckpoint(eager=True)
 
-    # within-batch greedy: verified edges among survivors, driver-side
-    # first-arrival resolution (micro-batch-bounded by construction)
-    b = my_bands.join(survivors.select("did"), "did", "left_semi")
-    x, y = b.alias("x"), b.alias("y")
-    wb_cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.did") < F.col("y.did")),
-        )
-        .select(F.col("x.did").alias("id_a"), F.col("y.did").alias("id_b"))
-        .distinct()
+    wb_cand = bucket_self_join(
+        keys.join(survivors.select("did"), "did", "left_semi"), key_cols
     )
-    sv_a = survivors.select(F.col("did").alias("id_a"), F.col("signature").alias("sig_a"))
-    sv_b = survivors.select(F.col("did").alias("id_b"), F.col("signature").alias("sig_b"))
     edge_rows = (
-        _est_jaccard_pairs(wb_cand, sv_a, sv_b, num_perm)
-        .filter(F.col("est_jaccard") >= threshold)
+        verify(wb_cand, survivors, survivors)
         .limit(max_batch_edges + 1)  # bound the driver collect
         .collect()
     )
     if len(edge_rows) > max_batch_edges:
         raise ValueError(
-            f"neardup_batch_against_index: batch {batch_id} produced more "
-            f"than max_batch_edges={max_batch_edges} verified within-batch "
+            f"{fn_name}: batch {batch_id} produced more than "
+            f"max_batch_edges={max_batch_edges} verified within-batch "
             f"near-dup edges; the greedy first-arrival resolution is "
             f"driver-side by design and this batch would not fit. Shrink "
             f"the source's per-trigger file or byte limit, raise "
@@ -1522,19 +1447,76 @@ def neardup_batch_against_index(
     accepted.select(F.col("did").alias(id_col)).write.mode("overwrite").parquet(
         f"{accepted_path}/batch_id={batch_id}"
     )
-    accepted.select("did", "signature").write.mode("overwrite").parquet(
-        f"{sig_index_path}/batch_id={batch_id}"
+    _write_index_batch(
+        accepted,
+        keys.join(F.broadcast(acc_df), "did", "left_semi"),
+        index_path,
+        suffix,
+        batch_id,
     )
-    my_bands.join(F.broadcast(acc_df), "did", "left_semi").write.mode(
-        "overwrite"
-    ).parquet(f"{band_index_path}/batch_id={batch_id}")
     # free this batch's checkpoints: over a long run, per-batch blocks
     # left pinned in the block manager grow without bound (the
     # split_hot_buckets round-4 advice pattern, applied per micro-batch).
     # DataFrame.unpersist() is a CacheManager call that does NOT touch
     # localCheckpoint blocks — the RDD-level release is required.
-    for df_ in (accepted, survivors, my_bands, sigs):
+    for df_ in (accepted, survivors, keys, rows):
         free_checkpoint(df_)
+
+
+def neardup_batch_against_index(
+    batch: DataFrame,
+    batch_id: int,
+    sig_index_path: str,
+    accepted_path: str,
+    threshold: float = 0.5,
+    num_perm: int = 64,
+    shingle_n: int = 3,
+    bands: int = 16,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    max_batch_edges: int = 1_000_000,
+) -> None:
+    """Merge one micro-batch into a growing NEAR-dup-deduplicated corpus
+    — the MinHash analog of ``dedup_batch_against_index``: reject every
+    batch doc whose estimated Jaccard (signature agreement) against an
+    ALREADY-ACCEPTED doc reaches ``threshold``, resolve within-batch
+    near-dups greedily in id order, and extend the accepted-signature
+    index with the survivors.
+
+    Runs ``_greedy_index_merge`` with the batch operator's stages
+    (dedup.minhash_neardup_pairs): (did, signature) rows at
+    ``sig_index_path``, the pre-banded (did, band, bucket) rows at
+    ``sig_index_path + "_bands"``, verification by
+    ``dedup.minhash_verify_pairs``."""
+    from ..operators.dedup import (
+        minhash_bands,
+        minhash_signatures,
+        minhash_verify_pairs,
+    )
+
+    def verify(cands: DataFrame, a: DataFrame, b: DataFrame) -> DataFrame:
+        return minhash_verify_pairs(
+            cands,
+            a.select(F.col("did").alias("id_a"), F.col("signature").alias("sig_a")),
+            b.select(F.col("did").alias("id_b"), F.col("signature").alias("sig_b")),
+            num_perm,
+            threshold,
+        )
+
+    _greedy_index_merge(
+        minhash_signatures(batch, text_col, id_col, num_perm, shingle_n)
+        .withColumnRenamed(id_col, "did"),
+        lambda s: minhash_bands(s, bands, num_perm // bands),
+        ["band", "bucket"],
+        verify,
+        batch_id,
+        sig_index_path,
+        "_bands",
+        accepted_path,
+        id_col,
+        max_batch_edges,
+        "neardup_batch_against_index",
+    )
 
 
 def streamed_incremental_neardup(
@@ -1554,10 +1536,9 @@ def streamed_incremental_neardup(
     over all candidates — reject iff est-Jaccard >= threshold against an
     already-accepted (seed or earlier-surviving) doc."""
     n_slices = resolve_slices(n_slices, 3)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    from ..operators.dedup import minhash_signatures
+    from ..operators.dedup import minhash_bands, minhash_signatures
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id", "text")
 
@@ -1572,10 +1553,13 @@ def streamed_incremental_neardup(
         .withColumnRenamed("doc_id", "did")
         .localCheckpoint(eager=True)
     )
-    seed_sigs.write.mode("overwrite").parquet(f"{sig_index_path}/batch_id=-1")
-    _banded_sigs(seed_sigs, bands, num_perm // bands).write.mode(
-        "overwrite"
-    ).parquet(f"{sig_index_path}_bands/batch_id=-1")
+    _write_index_batch(
+        seed_sigs,
+        minhash_bands(seed_sigs, bands, num_perm // bands),
+        sig_index_path,
+        "_bands",
+        -1,
+    )
     free_checkpoint(seed_sigs)
 
     def merge(b: DataFrame, batch_id: int) -> None:
@@ -1588,38 +1572,6 @@ def streamed_incremental_neardup(
     ):
         return spark.createDataFrame([], "doc_id long")
     return spark.read.parquet(accepted_path).select("doc_id")
-
-
-def _cos_dup_check(cand: DataFrame, va: DataFrame, vb: DataFrame, threshold: float) -> DataFrame:
-    """(id_a, id_b) candidates -> pairs whose cosine (rounded to 6 dp,
-    the batch operator's contract — similarity.embedding_neardup_pairs)
-    reaches ``threshold``. Arrow-batched numpy; map-only."""
-    import numpy as np
-    import pandas as pd
-
-    paired = cand.join(va, "id_a").join(vb, "id_b")
-
-    def verify(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = np.stack(pdf["vec_a"].to_numpy()).astype("float64")
-            b = np.stack(pdf["vec_b"].to_numpy()).astype("float64")
-            # zero-norm guard: sim 0, not NaN (similarity.py convention)
-            sims = np.round(
-                (a * b).sum(axis=1)
-                / np.maximum(
-                    np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1),
-                    1e-12,
-                ),
-                6,
-            )
-            out = pd.DataFrame(
-                {"id_a": pdf["id_a"].to_numpy(), "id_b": pdf["id_b"].to_numpy()}
-            )
-            yield out[sims >= threshold]
-
-    return paired.mapInPandas(verify, "id_a long, id_b long")
 
 
 def embedding_neardup_batch_against_index(
@@ -1643,107 +1595,41 @@ def embedding_neardup_batch_against_index(
     near-dups greedily in id order, extend the accepted index with the
     survivors.
 
-    Index layout mirrors the MinHash variant: (did, vec) at
-    ``vec_index_path`` for exact verification plus the PRE-BUCKETED
-    (did, tbl, bucket) rows at ``vec_index_path + "_buckets"``, both
-    seeded before the first batch and appended as ``batch_id=N``
-    partitions (overwrite per partition = replay idempotency). Each
-    batch buckets ONLY its own vectors; the probe is an equi-join
-    against the stored buckets; accepted vectors are re-read only for
-    the candidate pairs' exact cosine.
+    Runs ``_greedy_index_merge`` with the batch operator's stages
+    (similarity.embedding_neardup_pairs without hot-bucket splits):
+    (did, vec) rows at ``vec_index_path``, the pre-bucketed (did, tbl,
+    bucket) rows at ``vec_index_path + "_buckets"``, verification by
+    ``similarity.cosine_verify_pairs``.
 
     The bucket width is FIXED per index (like the MinHash band count):
     a growing index cannot re-bucket retroactively, so ``n_planes`` is
     part of the index contract — size it for the corpus you expect
     (auto_planes(final_rows)) rather than the first batch."""
-    from ..operators.dedup import greedy_accept_order
-    from ..operators.similarity import lsh_bucket_table
+    from ..operators.similarity import cosine_verify_pairs, lsh_bucket_table
 
-    spark = batch.sparkSession
-    bucket_index_path = vec_index_path + "_buckets"
-    vecs = (
-        batch.select(F.col(id_col).alias("did"), F.col(vec_col).alias("vec"))
-        .localCheckpoint(eager=True)
-    )
-    my_buckets = lsh_bucket_table(
-        vecs, dim, n_planes, n_tables, id_col="did", vec_col="vec"
-    ).localCheckpoint(eager=True)
-
-    idx = _read_index_or_none(spark, vec_index_path)
-    survivors = vecs
-    if idx is not None:
-        idx = idx.filter(F.col("batch_id") < batch_id)  # replay safety
-        idx_buckets = spark.read.parquet(bucket_index_path).filter(
-            F.col("batch_id") < batch_id
-        ).select(F.col("did").alias("id_b"), "tbl", "bucket")
-        cand = (
-            my_buckets.withColumnRenamed("did", "id_a")
-            .join(idx_buckets, ["tbl", "bucket"])
-            .select("id_a", "id_b")
-            .distinct()
+    def verify(cands: DataFrame, a: DataFrame, b: DataFrame) -> DataFrame:
+        return cosine_verify_pairs(
+            cands,
+            a.select(F.col("did").alias("id_a"), F.col("vec").alias("vec_a")),
+            b.select(F.col("did").alias("id_b"), F.col("vec").alias("vec_b")),
+            threshold,
         )
-        va = vecs.select(F.col("did").alias("id_a"), F.col("vec").alias("vec_a"))
-        vb = idx.select(F.col("did").alias("id_b"), F.col("vec").alias("vec_b"))
-        dup = (
-            _cos_dup_check(cand, va, vb, threshold)
-            .select(F.col("id_a").alias("did"))
-            .distinct()
-        )
-        survivors = vecs.join(dup, "did", "left_anti")
-    survivors = survivors.localCheckpoint(eager=True)
 
-    b = my_buckets.join(survivors.select("did"), "did", "left_semi")
-    x, y = b.alias("x"), b.alias("y")
-    wb_cand = (
-        x.join(
-            y,
-            (F.col("x.tbl") == F.col("y.tbl"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.did") < F.col("y.did")),
-        )
-        .select(F.col("x.did").alias("id_a"), F.col("y.did").alias("id_b"))
-        .distinct()
+    _greedy_index_merge(
+        batch.select(F.col(id_col).alias("did"), F.col(vec_col).alias("vec")),
+        lambda v: lsh_bucket_table(
+            v, dim, n_planes, n_tables, id_col="did", vec_col="vec"
+        ),
+        ["tbl", "bucket"],
+        verify,
+        batch_id,
+        vec_index_path,
+        "_buckets",
+        accepted_path,
+        id_col,
+        max_batch_edges,
+        "embedding_neardup_batch_against_index",
     )
-    sv_a = survivors.select(F.col("did").alias("id_a"), F.col("vec").alias("vec_a"))
-    sv_b = survivors.select(F.col("did").alias("id_b"), F.col("vec").alias("vec_b"))
-    edge_rows = (
-        _cos_dup_check(wb_cand, sv_a, sv_b, threshold)
-        .limit(max_batch_edges + 1)  # bound the driver collect
-        .collect()
-    )
-    if len(edge_rows) > max_batch_edges:
-        raise ValueError(
-            f"embedding_neardup_batch_against_index: batch {batch_id} "
-            f"produced more than max_batch_edges={max_batch_edges} verified "
-            f"within-batch near-dup edges; the greedy first-arrival "
-            f"resolution is driver-side by design and this batch would not "
-            f"fit. Shrink the trigger, raise the threshold, or raise "
-            f"max_batch_edges explicitly."
-        )
-    edges = [(r.id_a, r.id_b) for r in edge_rows]
-    ids = [r.did for r in survivors.select("did").collect()]
-    accepted_ids = greedy_accept_order(ids, edges)
-
-    import pandas as pd
-
-    acc_df = spark.createDataFrame(
-        pd.DataFrame({"did": [int(i) for i in accepted_ids]}), "did long"
-    )
-    accepted = survivors.join(
-        F.broadcast(acc_df), "did", "left_semi"
-    ).localCheckpoint(eager=True)
-    accepted.select(F.col("did").alias(id_col)).write.mode("overwrite").parquet(
-        f"{accepted_path}/batch_id={batch_id}"
-    )
-    accepted.write.mode("overwrite").parquet(
-        f"{vec_index_path}/batch_id={batch_id}"
-    )
-    my_buckets.join(F.broadcast(acc_df), "did", "left_semi").write.mode(
-        "overwrite"
-    ).parquet(f"{bucket_index_path}/batch_id={batch_id}")
-    # free this batch's checkpoints (see neardup_batch_against_index)
-    for df_ in (accepted, survivors, my_buckets, vecs):
-        free_checkpoint(df_)
 
 
 def streamed_incremental_embedding_neardup(
@@ -1766,10 +1652,9 @@ def streamed_incremental_embedding_neardup(
     already-accepted vector. The batch analog of the candidate graph is
     ``embedding_neardup_pairs(bucket_cap=None, n_planes=n_planes)``."""
     n_slices = resolve_slices(n_slices, 3)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from ..operators.similarity import lsh_bucket_table
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 2 == 0)
     new = emb.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding")
 
@@ -1780,10 +1665,13 @@ def streamed_incremental_embedding_neardup(
         corpus.select(F.col("vec_id").alias("did"), F.col("embedding").alias("vec"))
         .localCheckpoint(eager=True)
     )
-    seed.write.mode("overwrite").parquet(f"{vec_index_path}/batch_id=-1")
-    lsh_bucket_table(
-        seed, dim, n_planes, id_col="did", vec_col="vec"
-    ).write.mode("overwrite").parquet(f"{vec_index_path}_buckets/batch_id=-1")
+    _write_index_batch(
+        seed,
+        lsh_bucket_table(seed, dim, n_planes, id_col="did", vec_col="vec"),
+        vec_index_path,
+        "_buckets",
+        -1,
+    )
     free_checkpoint(seed)
 
     def merge(b: DataFrame, batch_id: int) -> None:
@@ -1854,7 +1742,7 @@ def cdc_batch_against_store(
     if not tot["n"]:
         free_checkpoint(mine)
         return None
-    idx = _read_index_or_none(spark, chunk_index_path)
+    idx = read_index_or_none(spark, chunk_index_path)
     new = mine
     if idx is not None:
         new = mine.join(
@@ -1898,7 +1786,6 @@ def streamed_bm25_doc_search(
     partitionable by term, queries broadcast at score time."""
     n_slices = resolve_slices(n_slices, 4)
     from ..operators import retrieval as RV
-    from ..plans.star import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     base = scratch_dir("bm25_index_")
@@ -1954,8 +1841,7 @@ def streamed_cdc_chunk_store(
     n_slices = resolve_slices(n_slices, 3)
     from ..operators.cdc import gear_table
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text")
     new = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id", "text")
 
@@ -2093,15 +1979,14 @@ def streamed_purchase_state_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stateless stream-static LEFT join → append mode; shares the batch
     oracle because containment attaches exactly one interval per
     purchase regardless of arrival order."""
-    from reddit_etl_pipeline_spark.plans.star import load as star_load
-    from reddit_etl_pipeline_spark.plans.star import scd2_intervals
+    from ..plans.star import scd2_intervals
 
     ev = read_events_stream(spark, sf_dir)
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
     hist = scd2_intervals(
-        star_load(spark, sf_dir, "events").filter(
+        load(spark, sf_dir, "events").filter(
             F.col("event_type") != "purchase"
         )
     ).withColumnRenamed("user_id", "h_user")
@@ -2128,10 +2013,8 @@ def streamed_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension (user_id = c_custkey) and emit enriched rows to the file
     sink. Stateless, so no sentinel staging is needed — the raw
     table-as-stream reader drains it in listing order."""
-    from reddit_etl_pipeline_spark.plans.star import load as star_load
-
     ev = read_events_stream(spark, sf_dir)
-    cust = star_load(spark, sf_dir, "customer").select(
+    cust = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_nationkey"
     )
     enriched = stream_static_enrich(
@@ -2196,7 +2079,6 @@ def streamed_part_components(
     """
     n_slices = resolve_slices(n_slices, 3)
     from ..operators.dedup import connected_components
-    from ..plans.star import load
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     stream = stage_sliced_stream(
@@ -2221,7 +2103,7 @@ def streamed_part_components(
         )
 
         def write(dst: str) -> None:
-            old = _read_index_or_none(spark, state_path)
+            old = read_index_or_none(spark, state_path)
             edges = (
                 new_edges
                 if old is None

@@ -109,6 +109,28 @@ def test_reappend_is_idempotent(spark, lineitem):
     assert _rows(spark.read.parquet(f"{store}/degrees")) == before_d
 
 
+def test_append_raises_on_foreign_partial(spark, lineitem):
+    """A foreign partial in the edge ledger must RAISE, never be read as
+    'nothing owned yet': that would write this batch as the owner of
+    every one of its edges, silently duplicating any the store holds.
+    Only a missing or still-empty ledger is the first append."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    store = scratch_dir("gstore_foreign_")
+    os.makedirs(f"{store}/edges/batch_id=0")
+    pq.write_table(
+        pa.table({"a": [1, 2], "b": [3, 4]}),
+        f"{store}/edges/batch_id=0/part-0.parquet",
+    )
+    with pytest.raises(AnalysisException):
+        G.append_batch(
+            lineitem.filter(F.col("l_orderkey") % G.N_BATCHES == 1), store, 1
+        )
+    assert not os.path.exists(f"{store}/edges/batch_id=1")
+
+
 def test_store_degrees_equal_direct(spark, lineitem):
     """Summed per-batch degree partials == degrees computed directly
     over the distinct merged graph (the additive-degrees law)."""

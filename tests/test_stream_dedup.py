@@ -105,7 +105,6 @@ def test_streamed_matches_batch_incremental_dedup(spark, sf_dir):
     assert got == want
 
 
-@pytest.mark.slow
 def test_streamed_incremental_neardup_matches_sequential_greedy(spark, sf_dir):
     """The streamed near-dup corpus build must equal one sequential
     greedy pass: seeds (even ids) all accepted; odd docs in id order,
@@ -155,7 +154,7 @@ def test_index_probe_reraises_on_foreign_directory(spark):
 
     import pytest
 
-    from reddit_etl_pipeline_spark.streaming.stream import _read_index_or_none
+    from reddit_etl_pipeline_spark.sources.lake import read_index_or_none as _read_index_or_none
 
     idx, acc = _setup("probe_")
     # missing path -> None (first batch)
@@ -170,7 +169,6 @@ def test_index_probe_reraises_on_foreign_directory(spark):
         assert _read_index_or_none(spark, idx) is not None
 
 
-@pytest.mark.slow
 def test_neardup_within_batch_edge_cap(spark):
     """A batch whose within-batch near-dup edges exceed max_batch_edges
     must fail fast with sizing guidance instead of collecting them all
@@ -191,7 +189,6 @@ def test_neardup_within_batch_edge_cap(spark):
     assert _accepted(spark, acc) == [0]
 
 
-@pytest.mark.slow
 def test_neardup_band_index_persisted_per_batch(spark):
     """The pre-banded (did, band, bucket) table must grow alongside the
     signature index — one partition per batch — so later batches band
@@ -220,7 +217,6 @@ def test_neardup_band_index_persisted_per_batch(spark):
     assert _accepted(spark, acc) == [1, 2, 4]
 
 
-@pytest.mark.slow
 def test_streamed_embedding_neardup_matches_sequential_greedy(spark, sf_dir):
     """The embedding-LSH streaming corpus build must equal one sequential
     greedy pass over the batch operator's pair graph: seeds (even ids)

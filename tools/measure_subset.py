@@ -6,11 +6,13 @@ calibration probes before/after so a steal window can't masquerade as
 a regression or a win).
 
 Each query also reports its Spark job count (one number when every rep
-agrees, else the per-rep list), read from a job group per rep
-(``statusTracker().getJobIdsForGroup``). Unlike wall time the count is
+agrees, else the per-rep list): the jobs carrying a job tag set for the
+rep (``SparkContext.addJobTag``), read back from the status store. A
+stream started inside the rep inherits the tag, so a stream twin's
+micro-batch jobs are in its count (they run under the stream's own job
+group, which a per-group count misses). Unlike wall time the count is
 noise-free: equal counts before and after a refactor are the check that
-it kept the query's plans. A stream twin's micro-batch jobs run under
-the stream's own job group and are not in its count.
+it kept the query's plans.
 
 Usage: python tools/measure_subset.py q1,q2,... [reps]
 """
@@ -54,6 +56,16 @@ def main() -> None:
     ).count()
 
     queries = entrymod.queries()
+    jsc = spark.sparkContext._jsc.sc()
+
+    def tagged_jobs(tag: str) -> int:
+        jsc.listenerBus().waitUntilEmpty()  # job events are async
+        jl, n = jsc.statusStore().jobsList(None), 0
+        for i in range(jl.size()):
+            tags = jl.apply(i).jobTags()
+            n += any(tags.apply(k) == tag for k in range(tags.size()))
+        return n
+
     bench.warm_probe(spark)
     pb = bench.calibration_probe(spark)
     sc = spark.sparkContext
@@ -61,11 +73,13 @@ def main() -> None:
     for name in names:
         best, counts = float("inf"), []
         for rep in range(reps):
-            group = f"measure_subset:{name}:{rep}"
-            sc.setJobGroup(group, name)
-            best = min(best, bench._time_queries(spark, queries, [name], 1)[name])
-            sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
-            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            tag = f"measure_subset:{name}:{rep}"
+            sc.addJobTag(tag)
+            try:
+                best = min(best, bench._time_queries(spark, queries, [name], 1)[name])
+            finally:
+                sc.removeJobTag(tag)
+            counts.append(tagged_jobs(tag))
         timings[name] = best
         jobs[name] = counts[0] if len(set(counts)) == 1 else counts
     pa = bench.calibration_probe(spark)
