@@ -18,6 +18,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: the 6-dp boundary rounding of every floating query result: Spark
+#: and the DuckDB oracles hash identically despite different summation
+#: orders. Defined here only — this module imports nothing from the
+#: package — and imported everywhere else.
 ROUND_DP = 6
 
 #: BPE-ish tokenizer: words (incl. apostrophes) or single non-space symbols.

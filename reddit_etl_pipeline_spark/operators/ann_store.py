@@ -47,17 +47,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.lake import write_meta_table, write_table
+from ..sources.lake import N_BATCHES  # noqa: F401 (the store's batch key)
+from ..sources.lake import read_meta_table, with_batch_id, write_meta_table, write_table
 from . import similarity as S
 
-#: synthetic ingest batches for tables without an ingest-date column:
-#: batch_id = vec_id % N_BATCHES (deterministic, disjoint, replayable)
-N_BATCHES = 8
-
-
-def batch_of(id_col: str = "vec_id") -> F.Column:
-    """The synthetic ingest-batch key for an embeddings relation."""
-    return (F.col(id_col) % N_BATCHES).alias("batch_id")
+#: partial layouts (``{id_col}``: the vector id), pinned on final reads
+IVF_ASSIGN_SCHEMA = "{id_col} bigint, batch_id int, cid int"
+LSH_BUCKETS_SCHEMA = "did bigint, tbl int, bucket bigint, ext bigint, batch_id int"
+PQ_CODES_SCHEMA = "{id_col} bigint, codes array<bigint>, batch_id int, cid int"
 
 
 def init_store(
@@ -76,25 +73,20 @@ def init_store(
         corpus, n_centroids, id_col=id_col, vec_col=vec_col
     )
     rows = [(int(i), [float(v) for v in c]) for i, c in enumerate(cents)]
-    # driver-side Arrow write: a tuple-relation .coalesce(1).write paid
-    # 5-7 s of serialized Python-worker round trips per metadata write
-    # (round-10 measurement in sources/lake.write_meta_table)
     write_meta_table(rows, "cid bigint, vec array<double>", f"{store_dir}/centroids")
     return cents
 
 
 def load_centroids(spark: SparkSession, store_dir: str) -> "np.ndarray":
-    """The frozen quantizer back as a k x dim float64 matrix (a
-    k-bounded driver collect; integer-valued doubles round-trip parquet
+    """The frozen quantizer back as a k x dim float64 matrix (k rows
+    read on the driver; integer-valued doubles round-trip parquet
     exactly)."""
     import numpy as np
 
-    rows = (
-        spark.read.parquet(f"{store_dir}/centroids")
-        .orderBy("cid")
-        .collect()
+    rows = sorted(
+        read_meta_table(f"{store_dir}/centroids"), key=lambda r: r["cid"]
     )
-    return np.array([list(r["vec"]) for r in rows], dtype="float64")
+    return np.array([r["vec"] for r in rows], dtype="float64")
 
 
 def append_batch(
@@ -109,17 +101,14 @@ def append_batch(
     cells under the frozen quantizer and write the (batch_id, vec_id,
     cid) partition with dynamic overwrite — re-running a batch replaces
     only itself; no other batch's partial (and no raw history) is read
-    or touched. ``batch_id=None`` derives each row's batch from
-    ``batch_of`` (multi-batch input); pass it explicitly when the
+    or touched. ``batch_id=None`` derives each row's batch from the
+    lake's batch key (multi-batch input); pass it explicitly when the
     caller already isolated one ingest batch."""
     spark = vectors.sparkSession
     if cents is None:
         cents = load_centroids(spark, store_dir)
     assign = S.ivf_assign_cells(vectors, cents, 1, id_col, vec_col)
-    keyed = assign.withColumn(
-        "batch_id",
-        F.lit(int(batch_id)) if batch_id is not None else (F.col(id_col) % N_BATCHES),
-    )
+    keyed = with_batch_id(assign, batch_id, id_col)
     # INVERTED-LIST layout (round 10): partials partition by (batch_id,
     # cid), not batch_id alone — each cell IS an inverted list, so a
     # query's nprobe cells prune the scan to nprobe/k of the corpus at
@@ -155,8 +144,10 @@ def build_ann_store(
 def store_assignments(spark: SparkSession, store_dir: str, id_col: str = "vec_id") -> DataFrame:
     """The merged inverted-list membership relation (id, cid) — the
     union of per-batch partials, read with partition pruning available
-    on batch_id for selective rebuilds/audits."""
-    return spark.read.parquet(f"{store_dir}/ivf_assign").select(id_col, "cid")
+    on cid (the probed lists) and batch_id (rebuilds/audits)."""
+    return spark.read.schema(IVF_ASSIGN_SCHEMA.format(id_col=id_col)).parquet(
+        f"{store_dir}/ivf_assign"
+    ).select(id_col, "cid")
 
 
 # ---------------------------------------------------------------------------
@@ -204,7 +195,7 @@ def init_lsh_store(
 
 
 def load_lsh_meta(spark: SparkSession, store_dir: str) -> tuple:
-    r = spark.read.parquet(f"{store_dir}/lsh_meta").collect()[0]
+    r = read_meta_table(f"{store_dir}/lsh_meta")[0]
     crc = _plane_family_crc(r["dim"], r["n_planes"])
     if crc != r["plane_crc"]:
         raise ValueError(
@@ -235,10 +226,7 @@ def append_lsh_batch(
         vectors, dim, n_planes, n_tables, id_col, vec_col,
         extra_bits=split_bits,
     )
-    keyed = cb.withColumn(
-        "batch_id",
-        F.lit(int(batch_id)) if batch_id is not None else (F.col("did") % N_BATCHES),
-    )
+    keyed = with_batch_id(cb, batch_id, "did")
     # one file per (batch, table): every query probes all tables, so
     # there is no tbl-level pruning win (unlike the IVF cells) — but
     # n_tables files per batch keep the read parallel instead of
@@ -290,7 +278,8 @@ def store_lsh_topk(
     # band self-join (the stored files are few; an unsplit scan would
     # run the bucket-join stages on a handful of tasks)
     cb = (
-        spark.read.parquet(f"{store_dir}/lsh_buckets")
+        spark.read.schema(LSH_BUCKETS_SCHEMA)
+        .parquet(f"{store_dir}/lsh_buckets")
         .select("did", "tbl", "bucket", "ext")
         .repartition(spark.sparkContext.defaultParallelism)
     )
@@ -331,9 +320,8 @@ def store_topk(
         r["cid"] for r in q_assign.select("cid").distinct().collect()
     )
     c_assign = (
-        spark.read.parquet(f"{store_dir}/ivf_assign")
+        store_assignments(spark, store_dir, id_col)
         .filter(F.col("cid").isin(probed))
-        .select(id_col, "cid")
         .repartition(spark.sparkContext.defaultParallelism)
     )
     return S.ivf_probe(corpus, queries, c_assign, q_assign, k, id_col, vec_col)
@@ -374,14 +362,10 @@ def init_pq_store(
     deterministic lowest-id sample and FREEZE both into the store
     (``centroids``: cid, vec; ``codebooks``: s, c, vec — integer-valued
     doubles, exact through parquet). Returns (cents, books)."""
-    cents = S.train_ivf_grid_centroids(
-        corpus, n_centroids, id_col=id_col, vec_col=vec_col
-    )
+    cents = init_store(corpus, store_dir, n_centroids, id_col, vec_col)
     books = S._train_residual_codebooks(
         corpus, cents, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col
     )
-    crows = [(int(i), [float(v) for v in c]) for i, c in enumerate(cents)]
-    write_meta_table(crows, "cid bigint, vec array<double>", f"{store_dir}/centroids")
     brows = [
         (int(s), int(c), [float(v) for v in books[s, c]])
         for s in range(books.shape[0])
@@ -395,23 +379,18 @@ def init_pq_store(
 
 def load_pq_model(spark: SparkSession, store_dir: str) -> tuple:
     """The frozen (centroids, codebooks) back as float64 tensors — a
-    model-size-bounded driver collect (k x dim + m x n_codes x sub
+    model-size-bounded driver read (k x dim + m x n_codes x sub
     integer-valued doubles)."""
     import numpy as np
 
     cents = load_centroids(spark, store_dir)
-    rows = (
-        spark.read.parquet(f"{store_dir}/codebooks")
-        .orderBy("s", "c")
-        .collect()
+    # the full (s, c) grid init_pq_store wrote, in (s, c) order
+    rows = sorted(
+        read_meta_table(f"{store_dir}/codebooks"),
+        key=lambda r: (r["s"], r["c"]),
     )
-    m = max(r["s"] for r in rows) + 1
-    n_codes = max(r["c"] for r in rows) + 1
-    sub = len(rows[0]["vec"])
-    books = np.zeros((m, n_codes, sub))
-    for r in rows:
-        books[r["s"], r["c"]] = list(r["vec"])
-    return cents, books
+    books = np.array([r["vec"] for r in rows], dtype="float64")
+    return cents, books.reshape(rows[-1]["s"] + 1, rows[-1]["c"] + 1, -1)
 
 
 def append_pq_batch(
@@ -431,10 +410,7 @@ def append_pq_batch(
     spark = vectors.sparkSession
     cents, books = model if model is not None else load_pq_model(spark, store_dir)
     layout = S.ivfpq_layout(vectors, cents, books, id_col, vec_col)
-    keyed = layout.withColumn(
-        "batch_id",
-        F.lit(int(batch_id)) if batch_id is not None else (F.col(id_col) % N_BATCHES),
-    )
+    keyed = with_batch_id(layout, batch_id, id_col)
     write_table(
         keyed.repartition("batch_id", "cid"),
         f"{store_dir}/pq_codes",
@@ -506,7 +482,8 @@ def store_pq_topk(
         for cid in row:
             by_cid.setdefault(int(cid), []).append(qi)
     index = (
-        spark.read.parquet(f"{store_dir}/pq_codes")
+        spark.read.schema(PQ_CODES_SCHEMA.format(id_col=id_col))
+        .parquet(f"{store_dir}/pq_codes")
         .filter(F.col("cid").isin(sorted(by_cid)))
         .select(id_col, "cid", "codes")
         .repartition(spark.sparkContext.defaultParallelism)

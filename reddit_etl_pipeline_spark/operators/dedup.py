@@ -24,10 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint
+from ..functions.text import ROUND_DP, fingerprint
 from .fixpoint import iterate
-
-ROUND_DP = 6
 
 
 # ------------------------------------------------------------------- exact

@@ -15,7 +15,9 @@ queries read a corpus-cardinality relation instead.
 
 THE DEDUP-ACROSS-BATCHES LAW (this store's merge law, like register
 MAX / counter SUM / per-row assignment): ingest batches are keyed by
-``l_orderkey % N_BATCHES``, so every co-purchase edge instance belongs
+``l_orderkey % N_BATCHES`` (``sources/lake``'s batch key — each
+order's whole co-purchase clique lands in one batch, the same slicing
+the streaming CC fold uses), so every co-purchase edge instance belongs
 to exactly one order and hence one batch — but the same (lo, hi) PAIR
 can arise from orders in several batches, and an edge seen in two
 batches must count once. Ownership is by FIRST WRITER: ``append_batch``
@@ -63,7 +65,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.lake import read_index_or_none, write_table
+from ..sources.lake import N_BATCHES, read_index_or_none, with_batch_id, write_table
 
 __all__ = [
     "N_BATCHES",
@@ -73,12 +75,6 @@ __all__ = [
     "store_edges",
     "store_degrees",
 ]
-
-#: synthetic ingest batches for the order-keyed fact slice:
-#: batch_id = l_orderkey % N_BATCHES (deterministic, disjoint, and each
-#: order's whole co-purchase clique lands in one batch — the same
-#: slicing the streaming CC fold uses)
-N_BATCHES = 8
 
 #: partial layouts, pinned on read: a store whose every partial was
 #: empty (an edgeless slice) holds no file to infer a schema from
@@ -92,23 +88,26 @@ def slice_edges(
     partkey: str = "l_partkey",
 ) -> DataFrame:
     """The distinct normalized (lo, hi) co-purchase edges derivable from
-    ONE lineitem slice: parts co-occurring in an order are adjacent.
+    ONE lineitem slice — identical to the rebuild path's derivation
+    restricted to the slice."""
+    return _order_pairs(lineitem, orderkey, partkey).distinct()
+
+
+def _order_pairs(
+    lineitem: DataFrame, orderkey: str, partkey: str, with_batch: bool = False
+) -> DataFrame:
+    """(lo, hi) per order: parts co-occurring in an order are adjacent.
     Self-join on the order key with lo < hi (no self-loops, each
-    unordered pair once), then distinct — identical to the rebuild
-    path's derivation restricted to the slice."""
+    unordered pair once); ``with_batch`` adds the order's batch ``b``."""
     li = lineitem.select(orderkey, partkey).distinct()
     a, b = li.alias("a"), li.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col(f"a.{orderkey}") == F.col(f"b.{orderkey}"))
-            & (F.col(f"a.{partkey}") < F.col(f"b.{partkey}")),
-        )
-        .select(
-            F.col(f"a.{partkey}").alias("lo"),
-            F.col(f"b.{partkey}").alias("hi"),
-        )
-        .distinct()
+    batch = [(F.col(f"a.{orderkey}") % N_BATCHES).alias("b")] if with_batch else []
+    return a.join(
+        b,
+        (F.col(f"a.{orderkey}") == F.col(f"b.{orderkey}"))
+        & (F.col(f"a.{partkey}") < F.col(f"b.{partkey}")),
+    ).select(
+        F.col(f"a.{partkey}").alias("lo"), F.col(f"b.{partkey}").alias("hi"), *batch
     )
 
 
@@ -146,19 +145,8 @@ def build_graph_store(
     once and assign each distinct (lo, hi) to its MIN batch — equal, by
     the first-writer law, to appending batches in batch-id order
     (pinned in tests/test_graph_store.py)."""
-    li = lineitem.select(orderkey, partkey).distinct()
-    a, b = li.alias("a"), li.alias("b")
     owned = (
-        a.join(
-            b,
-            (F.col(f"a.{orderkey}") == F.col(f"b.{orderkey}"))
-            & (F.col(f"a.{partkey}") < F.col(f"b.{partkey}")),
-        )
-        .select(
-            F.col(f"a.{partkey}").alias("lo"),
-            F.col(f"b.{partkey}").alias("hi"),
-            (F.col(f"a.{orderkey}") % N_BATCHES).alias("b"),
-        )
+        _order_pairs(lineitem, orderkey, partkey, with_batch=True)
         .groupBy("lo", "hi")
         .agg(F.min("b").alias("batch_id"))
     )
@@ -186,7 +174,7 @@ def append_batch(
             ["lo", "hi"],
             "left_anti",
         )
-    owned = cand.withColumn("batch_id", F.lit(int(batch_id)))
+    owned = with_batch_id(cand, batch_id)
     _write_edge_partial(owned, store_dir)
 
 

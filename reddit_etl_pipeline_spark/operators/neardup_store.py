@@ -40,14 +40,13 @@ the beyond-reference training-data family (SURVEY §2 extensions).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..sources.lake import write_meta_table, write_table
+from ..sources.lake import N_BATCHES  # noqa: F401 (the store's batch key)
+from ..sources.lake import read_meta_table, with_batch_id, write_meta_table, write_table
 from . import dedup as D
 
-#: synthetic ingest batches for corpora without an ingest-date column:
-#: batch_id = doc_id % N_BATCHES (deterministic, disjoint, replayable)
-N_BATCHES = 8
+#: signature partial layout (``{id_col}``: the doc id), pinned on read
+SIGNATURES_SCHEMA = "{id_col} bigint, signature array<bigint>, batch_id int"
 
 
 def _perm_family_crc(num_perm: int) -> int:
@@ -87,7 +86,7 @@ def load_meta(spark: SparkSession, store_dir: str) -> tuple:
     """(num_perm, shingle_n, bands), refusing a store whose permutation
     family no longer matches the code's — the stored signatures would
     band into a different bucket space than a fresh query side."""
-    r = spark.read.parquet(f"{store_dir}/minhash_meta").collect()[0]
+    r = read_meta_table(f"{store_dir}/minhash_meta")[0]
     crc = _perm_family_crc(r["num_perm"])
     if crc != r["perm_crc"]:
         raise ValueError(
@@ -115,10 +114,7 @@ def append_batch(
     spark = docs.sparkSession
     num_perm, shingle_n, _bands = load_meta(spark, store_dir)
     sigs = D.minhash_signatures(docs, text_col, id_col, num_perm, shingle_n)
-    keyed = sigs.withColumn(
-        "batch_id",
-        F.lit(int(batch_id)) if batch_id is not None else (F.col(id_col) % N_BATCHES),
-    )
+    keyed = with_batch_id(sigs, batch_id, id_col)
     # one file per batch: signature partials are doc-cardinality rows of
     # num_perm+1 BIGINTs — a 32-task write would scatter each batch into
     # KB-sized files (the sketch-store lesson); store_pairs rebalances
@@ -154,10 +150,9 @@ def store_signatures(
     """The merged signature relation (id, signature) — the union of
     per-batch partials, rebalanced to full parallelism (the stored
     files are one per batch; an unsplit scan would run the band
-    self-join on a handful of tasks). The partial schema is pinned: a
-    store whose every batch was empty holds no file to infer it from."""
+    self-join on a handful of tasks)."""
     return (
-        spark.read.schema(f"{id_col} bigint, signature array<bigint>, batch_id int")
+        spark.read.schema(SIGNATURES_SCHEMA.format(id_col=id_col))
         .parquet(f"{store_dir}/signatures")
         .select(id_col, "signature")
         .repartition(spark.sparkContext.defaultParallelism)

@@ -32,10 +32,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..functions.text import ROUND_DP
 from .dedup import bucket_self_join
 from .fixpoint import free_checkpoint
 
-ROUND_DP = 6
 # Similarities are rounded to this precision BEFORE ranking (not just at
 # output): numpy's pairwise summation and DuckDB's left-to-right
 # list_dot_product disagree at ~1e-16 relative, so ranking raw float64

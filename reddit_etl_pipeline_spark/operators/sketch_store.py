@@ -48,6 +48,19 @@ from . import sketches as SK
 #: partial tables the store carries, each partitioned by batch_date
 STORE_TABLES = ("hll_users", "cms_users", "value_grid", "drift_grid")
 
+#: partial layouts, pinned on every final read: a store whose every
+#: partial was empty holds no file to infer a schema from
+HLL_USERS_SCHEMA = "event_type string, reg bigint, rho_max int, batch_date string"
+CMS_USERS_SCHEMA = "j int, idx bigint, counter bigint, batch_date string"
+VALUE_GRID_SCHEMA = "event_type string, bin bigint, n bigint, batch_date string"
+DRIFT_GRID_SCHEMA = (
+    "event_type string, side int, bin bigint, n bigint, batch_date string"
+)
+ORDERS_ROLLUP_SCHEMA = (
+    "n_orders bigint, revenue decimal(28,2), max_order decimal(18,2),"
+    " batch_date string"
+)
+
 
 def _with_batch_date(events: DataFrame) -> DataFrame:
     """Ingest-date key: the event's UTC calendar date as a string
@@ -95,25 +108,19 @@ def day_partials(events: DataFrame, tables=STORE_TABLES) -> dict[str, DataFrame]
     return out
 
 
-def _write_partials(df: DataFrame, path: str) -> None:
-    # one file per date: partials are sketch-geometry-sized, so a
-    # 32-task write would scatter each day into dozens of KB files and
-    # the merge read would pay per-file open cost instead of one
-    # footer per day (measured 2.7 s vs 0.9 s at 10× before this)
-    write_table(
-        df.repartition("batch_date"),
-        path,
-        mode="overwrite",
-        partition_by=["batch_date"],
-    )
-
-
 def build_store(events: DataFrame, store_dir: str, tables=STORE_TABLES) -> None:
     """Materialize the store from an events relation: one scan per
     partial table, written partitioned by batch_date (dynamic overwrite
-    — rerunning a backfill only rewrites the dates present)."""
+    — rerunning a backfill only rewrites the dates present). One file
+    per date: partials are sketch-geometry-sized, so a 32-task write
+    would scatter each day into dozens of KB files and the merge read
+    would pay per-file open cost instead of one footer per day
+    (measured 2.7 s vs 0.9 s at 10× before this)."""
     for name, df in day_partials(events, tables).items():
-        _write_partials(df, f"{store_dir}/{name}")
+        write_table(
+            df.repartition("batch_date"), f"{store_dir}/{name}",
+            mode="overwrite", partition_by=["batch_date"],
+        )
 
 
 def append_day(
@@ -124,12 +131,7 @@ def append_day(
     append idempotent (a rerun replaces only this date's partial); no
     other date's partial — and no raw history — is read or touched."""
     day = events.filter(F.date_format("ts", "yyyy-MM-dd") == date)
-    for name, df in day_partials(day, tables).items():
-        _write_partials(df, f"{store_dir}/{name}")
-
-
-def _read(spark: SparkSession, store_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{store_dir}/{name}")
+    build_store(day, store_dir, tables)
 
 
 def store_distinct_users(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -140,7 +142,8 @@ def store_distinct_users(spark: SparkSession, store_dir: str) -> DataFrame:
     (``sketches.hll_users_oracle_sql``) because max over a date
     partition's maxes == max over the union."""
     regs = (
-        _read(spark, store_dir, "hll_users")
+        spark.read.schema(HLL_USERS_SCHEMA)
+        .parquet(f"{store_dir}/hll_users")
         .groupBy("event_type", "reg")
         .agg(F.max("rho_max").alias("rho_max"))
     )
@@ -152,7 +155,8 @@ def store_value_quantiles(spark: SparkSession, store_dir: str) -> DataFrame:
     merged per-day bin counts (SUM law) — the persisted counterpart of
     ``sketches.value_quantiles``; shares its oracle."""
     bins = (
-        _read(spark, store_dir, "value_grid")
+        spark.read.schema(VALUE_GRID_SCHEMA)
+        .parquet(f"{store_dir}/value_grid")
         .groupBy("event_type", "bin")
         .agg(F.sum("n").alias("n"))
     )
@@ -167,7 +171,8 @@ def store_heavy_users(
     corpus rescan; shares ``sketches.cms_users_oracle_sql``. (The exact
     side is the validation companion, as in the batch/streaming twins.)"""
     sketch = (
-        _read(spark, store_dir, "cms_users")
+        spark.read.schema(CMS_USERS_SCHEMA)
+        .parquet(f"{store_dir}/cms_users")
         .groupBy("j", "idx")
         .agg(F.sum("counter").alias("counter"))
     )
@@ -180,7 +185,8 @@ def store_value_drift(spark: SparkSession, store_dir: str) -> DataFrame:
     (``sketches.drift_from_side_grid``) — exact BIGINT numerator, one
     6-dp divide; shares ``sketches.value_drift_oracle_sql``."""
     grid = (
-        _read(spark, store_dir, "drift_grid")
+        spark.read.schema(DRIFT_GRID_SCHEMA)
+        .parquet(f"{store_dir}/drift_grid")
         .groupBy("event_type", "side", "bin")
         .agg(F.sum("n").alias("n"))
     )
@@ -204,8 +210,10 @@ def store_window_users(
     still independent of raw event count. Windows at the store's start
     are partial (cover only the days present), identically on both
     sides. Returns (window_end, event_type, approx_users)."""
-    regs = _read(spark, store_dir, "hll_users").withColumn(
-        "d", F.to_date("batch_date")
+    regs = (
+        spark.read.schema(HLL_USERS_SCHEMA)
+        .parquet(f"{store_dir}/hll_users")
+        .withColumn("d", F.to_date("batch_date"))
     )
     dates = regs.select(F.col("d").alias("window_end")).distinct()
     exploded = regs.select(
@@ -285,7 +293,10 @@ def build_order_rollup_store(orders: DataFrame, store_dir: str) -> None:
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("revenue"),
         F.max(F.col("o_totalprice").cast("decimal(18,2)")).alias("max_order"),
     )
-    _write_partials(part, f"{store_dir}/orders_rollup")
+    write_table(
+        part.repartition("batch_date"), f"{store_dir}/orders_rollup",
+        mode="overwrite", partition_by=["batch_date"],
+    )
 
 
 def rollup_store_yearly(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -293,7 +304,9 @@ def rollup_store_yearly(spark: SparkSession, store_dir: str) -> DataFrame:
     SUM/SUM/MAX over ≤ 12 rows per year, never a fact-table scan. The
     revenue rounds to 2 dp IN DECIMAL before the double cast (the
     grand-total rule)."""
-    p = _read(spark, store_dir, "orders_rollup")
+    p = spark.read.schema(ORDERS_ROLLUP_SCHEMA).parquet(
+        f"{store_dir}/orders_rollup"
+    )
     return p.groupBy(
         F.substring("batch_date", 1, 4).alias("year")
     ).agg(

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-ROUND_DP = 6
+from ..functions.text import ROUND_DP
 
 #: Gopher-style flag thresholds (Rae et al. 2021, table A1-ish —
 #: simplified to the token-count variants implemented here).

@@ -25,8 +25,10 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..functions.transforms import transform_posts
+from ..operators import sketches as SK
 from ..operators.quality import assert_not_null, assert_unique, summary_stats, total_nulls
 from ..operators.upsert import upsert_anti_join
 from ..sources.lake import read_table, swap_state, with_batch_date, write_table
@@ -106,6 +108,11 @@ def run_daily_batch(
     return audits
 
 
+#: posts sketch-store partial layouts, pinned on every final read
+AUTHOR_HLL_SCHEMA = "subreddit string, reg bigint, rho_max int, batch_date string"
+SCORE_GRID_SCHEMA = "subreddit string, bin bigint, n bigint, batch_date string"
+
+
 def write_post_sketch_partials(day: DataFrame, sketch_store_path: str) -> None:
     """This batch_date's mergeable sketch partials for the posts
     pipeline: per-(batch_date, subreddit) author-HLL registers (distinct
@@ -114,36 +121,29 @@ def write_post_sketch_partials(day: DataFrame, sketch_store_path: str) -> None:
     overwrite: a day's rerun replaces only that day's partial, exactly
     like the lake append it rides along with. ``day`` must carry
     batch_date (the lake read does)."""
-    from pyspark.sql import functions as F
-
-    from ..operators import sketches as SK
-    from ..operators.sketch_store import _write_partials
-
-    _write_partials(
-        SK.hll_registers(
+    partials = {
+        "author_hll": SK.hll_registers(
             day, ["batch_date", "subreddit"], F.xxhash64("author")
         ),
-        f"{sketch_store_path.rstrip('/')}/author_hll",
-    )
-    _write_partials(
-        SK.value_grid_bins(
+        "score_grid": SK.value_grid_bins(
             day.withColumn("score_d", F.col("score").cast("double")),
             ["batch_date", "subreddit"],
             "score_d",
         ),
-        f"{sketch_store_path.rstrip('/')}/score_grid",
-    )
+    }
+    for name, df in partials.items():
+        write_table(
+            df.repartition("batch_date"), f"{sketch_store_path.rstrip('/')}/{name}",
+            mode="overwrite", partition_by=["batch_date"],
+        )
 
 
 def post_sketch_distinct_authors(spark: SparkSession, sketch_store_path: str) -> DataFrame:
     """(subreddit, approx_users) from the posts sketch store — merged
     register partials, never a lake rescan."""
-    from pyspark.sql import functions as F
-
-    from ..operators import sketches as SK
-
     regs = (
-        spark.read.parquet(f"{sketch_store_path.rstrip('/')}/author_hll")
+        spark.read.schema(AUTHOR_HLL_SCHEMA)
+        .parquet(f"{sketch_store_path.rstrip('/')}/author_hll")
         .groupBy("subreddit", "reg")
         .agg(F.max("rho_max").alias("rho_max"))
     )
@@ -152,12 +152,9 @@ def post_sketch_distinct_authors(spark: SparkSession, sketch_store_path: str) ->
 
 def post_sketch_score_quantiles(spark: SparkSession, sketch_store_path: str) -> DataFrame:
     """Per-subreddit score quantiles from merged grid partials."""
-    from pyspark.sql import functions as F
-
-    from ..operators import sketches as SK
-
     bins = (
-        spark.read.parquet(f"{sketch_store_path.rstrip('/')}/score_grid")
+        spark.read.schema(SCORE_GRID_SCHEMA)
+        .parquet(f"{sketch_store_path.rstrip('/')}/score_grid")
         .groupBy("subreddit", "bin")
         .agg(F.sum("n").alias("n"))
     )

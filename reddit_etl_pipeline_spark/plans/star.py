@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-ROUND_DP = 6
+from ..functions.text import ROUND_DP
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

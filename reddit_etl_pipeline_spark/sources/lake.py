@@ -10,6 +10,13 @@ Layout (SURVEY.md §4.3): partitioned by ``batch_date`` (the reference's
 pruning for per-day reprocessing and bounds the rewrite unit for upserts.
 At 100 TB: one directory per day, each day internally split by Spark into
 ~128 MB files; dynamic partition overwrite rewrites only touched days.
+
+The per-batch PARTIALS of every store, index and ledger share this
+layout: one batch key (``with_batch_id``), one replay-idempotent write
+(``write_table(df, path, mode="overwrite", partition_by=[...])``
+replaces exactly the partitions ``df`` carries and never reshapes it),
+schema-pinned final reads, ``read_index_or_none`` for in-fold probes
+and pyarrow meta tables (``write_meta_table`` / ``read_meta_table``).
 """
 
 from __future__ import annotations
@@ -24,6 +31,19 @@ from pyspark.sql import functions as F
 T = TypeVar("T")
 
 BATCH_DATE_COL = "batch_date"
+
+#: synthetic ingest batches for partials of inputs without an ingest
+#: key: batch_id = id % N_BATCHES (deterministic, disjoint, replayable)
+N_BATCHES = 8
+
+
+def with_batch_id(
+    df: DataFrame, batch_id: int | None, id_col: str | None = None
+) -> DataFrame:
+    """Stamp a partial's ``batch_id``: the caller's one batch, else each
+    row's synthetic batch ``id_col % N_BATCHES``."""
+    key = F.col(id_col) % N_BATCHES if batch_id is None else F.lit(int(batch_id))
+    return df.withColumn("batch_id", key)
 
 
 def write_table(
@@ -89,8 +109,8 @@ def write_meta_table(rows: list[tuple], schema_ddl: str, path: str) -> None:
     Python-RDD with defaultParallelism partitions, and ``coalesce(1)``
     folds all of them into one task that round-trips a Python worker
     per partition, serially. The driver already holds the rows; one
-    ``pyarrow.parquet.write_table`` is ~2 ms and ``spark.read.parquet``
-    reads back the identical schema (BIGINT/INT/DOUBLE/array<double>
+    ``pyarrow.parquet.write_table`` is ~2 ms and ``read_meta_table``
+    reads back the identical values (BIGINT/INT/DOUBLE/array<double>
     columns round-trip exactly — all store metadata is integer-valued).
     Overwrite semantics match ``mode("overwrite")``: the directory is
     replaced through ``swap_state``."""
@@ -123,6 +143,16 @@ def write_meta_table(rows: list[tuple], schema_ddl: str, path: str) -> None:
         pq.write_table(tb, os.path.join(dst, "part-00000.parquet"))
 
     swap_state(path, write)
+
+
+def read_meta_table(path: str) -> list[dict]:
+    """The rows of a ``write_meta_table`` relation as dicts, read with
+    pyarrow on the driver — no Spark job, where ``spark.read.parquet
+    (...).collect()`` pays an inference and a collect job. Callers order
+    the rows."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(path).to_pylist()
 
 
 def swap_state(path: str, write: Callable[[str], T]) -> T:

@@ -27,7 +27,14 @@ from .bounded import (  # noqa: F401
 )
 from ..operators.fixpoint import free_checkpoint
 from ..plans.star import load
-from ..sources.lake import read_index_or_none, swap_state
+from ..sources.lake import read_index_or_none, swap_state, with_batch_id, write_table
+
+#: partial layouts pinned on final reads (an all-empty run leaves no file)
+ROLLUP_ADDITIVE_SCHEMA = (
+    "domain string, n_docs bigint, n_tokens bigint, q_sum bigint, batch_id int"
+)
+ROLLUP_URLS_SCHEMA = "domain string, curl string, batch_id int"
+ACCEPTED_SCHEMA = "{id_col} bigint, batch_id int"
 
 
 def _normalize_ts(df: DataFrame) -> DataFrame:
@@ -383,22 +390,14 @@ def streamed_sketch_store(
 
     def ingest(b: DataFrame, batch_id: int) -> None:
         parts = SS.day_partials(b, tables=("hll_users",))["hll_users"]
-        (
-            parts.withColumn("ingest_batch", F.lit(batch_id))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(store)
+        write_table(
+            with_batch_id(parts, batch_id).repartition(1), store,
+            mode="overwrite", partition_by=["batch_id"],
         )
 
     drain(stream, ingest)
-    # partial schema pinned: all-empty batches leave no file to infer from
     regs = (
-        spark.read.schema(
-            "batch_date string, event_type string, reg bigint, rho_max int,"
-            " ingest_batch int"
-        )
+        spark.read.schema(SS.HLL_USERS_SCHEMA + ", batch_id int")
         .parquet(store)
         .groupBy("event_type", "reg")
         .agg(F.max("rho_max").alias("rho_max"))
@@ -451,21 +450,14 @@ def streamed_domain_rollup(
             token_count("text").cast("long").alias("n_toks"),
             F.round(quality_score("text") * 1e6).cast("long").alias("q_micro"),
         )
-        add = (
-            base.groupBy("domain")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_toks").alias("n_tokens"),
-                F.sum("q_micro").alias("q_sum"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
+        add = base.groupBy("domain").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_toks").alias("n_tokens"),
+            F.sum("q_micro").alias("q_sum"),
         )
-        (
-            add.repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{store}/additive")
+        write_table(
+            with_batch_id(add, batch_id).repartition(1), f"{store}/additive",
+            mode="overwrite", partition_by=["batch_id"],
         )
         cand = base.select("domain", "curl").distinct()
         others = read_index_or_none(spark, f"{store}/urls")
@@ -477,24 +469,15 @@ def streamed_domain_rollup(
                 ["domain", "curl"],
                 "left_anti",
             )
-        owned = cand.withColumn(
-            "batch_id", F.lit(batch_id)
-        ).localCheckpoint(eager=True)
-        (
-            owned.repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{store}/urls")
+        owned = with_batch_id(cand, batch_id).localCheckpoint(eager=True)
+        write_table(
+            owned.repartition(1), f"{store}/urls",
+            mode="overwrite", partition_by=["batch_id"],
         )
 
     drain(stream, ingest)
-    # partial schemas pinned: all-empty batches leave no file to infer from
     add = (
-        spark.read.schema(
-            "domain string, n_docs bigint, n_tokens bigint, q_sum bigint,"
-            " batch_id int"
-        )
+        spark.read.schema(ROLLUP_ADDITIVE_SCHEMA)
         .parquet(f"{store}/additive")
         .groupBy("domain")
         .agg(
@@ -504,7 +487,7 @@ def streamed_domain_rollup(
         )
     )
     urls = (
-        spark.read.schema("domain string, curl string, batch_id int")
+        spark.read.schema(ROLLUP_URLS_SCHEMA)
         .parquet(f"{store}/urls")
         .groupBy("domain")
         .agg(F.count(F.lit(1)).alias("n_urls"))
@@ -1192,9 +1175,9 @@ def dedup_batch_against_index(
     their fingerprints so later batches reject their duplicates.
 
     Idempotency under foreachBatch's at-least-once replay: both writes
-    land in a ``batch_id=N`` partition directory with overwrite mode, so
-    a replayed batch overwrites its own partition instead of doubling it
-    (the same per-key idempotency trick as date-partitioned lake writes).
+    overwrite this batch's ``batch_id`` partition, so a replayed batch
+    replaces its own partition instead of doubling it (the same per-key
+    idempotency trick as date-partitioned lake writes).
     The index is only ever APPENDED partitions — 8-byte fingerprints, no
     text — so the per-batch cost is one fingerprint anti-join; the corpus
     itself is never rescanned. On Delta/Iceberg the index write is an
@@ -1246,12 +1229,12 @@ def dedup_batch_against_index(
     # one computation, two partition writes: checkpoint so the anti-join
     # doesn't execute twice (and can't flap between the writes)
     accepted = accepted.localCheckpoint(eager=True)
-    accepted.select(id_col).write.mode("overwrite").parquet(
-        f"{accepted_path}/batch_id={batch_id}"
-    )
-    accepted.select("fp").write.mode("overwrite").parquet(
-        f"{index_path}/batch_id={batch_id}"
-    )
+    keyed = with_batch_id(accepted, batch_id)
+    for col, path in ((id_col, accepted_path), ("fp", index_path)):
+        write_table(
+            keyed.select(col, "batch_id"), path,
+            mode="overwrite", partition_by=["batch_id"],
+        )
     free_checkpoint(accepted)  # free this batch's checkpoint blocks
 
 
@@ -1282,10 +1265,12 @@ def streamed_incremental_dedup(
     base = scratch_dir("inc_dedup_")
     index_path = f"{base}/fp_index"
     accepted_path = f"{base}/accepted"
-    # seed the index once per corpus (batch_id=-1 partition)
-    corpus.select(
-        nullable_fingerprint("text").alias("fp")
-    ).distinct().write.mode("overwrite").parquet(f"{index_path}/batch_id=-1")
+    # seed the index once per corpus (batch -1)
+    seed = corpus.select(nullable_fingerprint("text").alias("fp")).distinct()
+    write_table(
+        with_batch_id(seed, -1), index_path,
+        mode="overwrite", partition_by=["batch_id"],
+    )
 
     def merge(b: DataFrame, batch_id: int) -> None:
         dedup_batch_against_index(b, batch_id, index_path, accepted_path)
@@ -1295,7 +1280,7 @@ def streamed_incremental_dedup(
     ):
         # no candidate docs at all: nothing to stream, nothing accepted
         return spark.createDataFrame([], "doc_id long")
-    return spark.read.parquet(accepted_path).select("doc_id")
+    return _read_accepted(spark, accepted_path, "doc_id")
 
 
 def _drain_id_sliced_stream(
@@ -1331,18 +1316,24 @@ def _drain_id_sliced_stream(
     return True
 
 
+def _read_accepted(spark: SparkSession, accepted_path: str, id_col: str) -> DataFrame:
+    """The accepted ids of an incremental build, in the pinned layout."""
+    schema = ACCEPTED_SCHEMA.format(id_col=id_col)
+    return spark.read.schema(schema).parquet(accepted_path).select(id_col)
+
+
 def _write_index_batch(
     rows: DataFrame, keys: DataFrame, index_path: str, suffix: str, batch_id: int
 ) -> None:
-    """One ``batch_id=N`` partition of a near-dup index: the (did,
-    payload) rows at ``index_path`` and their LSH key rows at
-    ``index_path + suffix`` (overwrite per partition = replay
-    idempotency). The seed (batch -1) and every merged batch write
-    through here."""
-    rows.write.mode("overwrite").parquet(f"{index_path}/batch_id={batch_id}")
-    keys.write.mode("overwrite").parquet(
-        f"{index_path}{suffix}/batch_id={batch_id}"
-    )
+    """One batch of a near-dup index: the (did, payload) rows at
+    ``index_path`` and their LSH key rows at ``index_path + suffix``,
+    each a partition overwrite of ``batch_id`` (replay idempotency). The
+    seed (batch -1) and every merged batch write through here."""
+    for df, path in ((rows, index_path), (keys, index_path + suffix)):
+        write_table(
+            with_batch_id(df, batch_id), path,
+            mode="overwrite", partition_by=["batch_id"],
+        )
 
 
 def _greedy_index_merge(
@@ -1365,7 +1356,7 @@ def _greedy_index_merge(
     over candidate (id_a, id_b) pairs and two (did, payload) sides.
 
     Index layout: TWO sibling growing tables, both seeded before the
-    first batch and appended as ``batch_id=N`` partitions
+    first batch and appended as ``batch_id`` partitions
     (``_write_index_batch``): the (did, payload) rows at ``index_path``
     for verification, and the PRE-KEYED rows at ``index_path + suffix``
     for the probe join. Persisting the keys means each micro-batch keys
@@ -1444,8 +1435,9 @@ def _greedy_index_merge(
     accepted = survivors.join(
         F.broadcast(acc_df), "did", "left_semi"
     ).localCheckpoint(eager=True)
-    accepted.select(F.col("did").alias(id_col)).write.mode("overwrite").parquet(
-        f"{accepted_path}/batch_id={batch_id}"
+    acc_ids = with_batch_id(accepted.select(F.col("did").alias(id_col)), batch_id)
+    write_table(
+        acc_ids, accepted_path, mode="overwrite", partition_by=["batch_id"]
     )
     _write_index_batch(
         accepted,
@@ -1571,7 +1563,7 @@ def streamed_incremental_neardup(
         new, "doc_id", n_slices, "inc_neardup_", merge
     ):
         return spark.createDataFrame([], "doc_id long")
-    return spark.read.parquet(accepted_path).select("doc_id")
+    return _read_accepted(spark, accepted_path, "doc_id")
 
 
 def embedding_neardup_batch_against_index(
@@ -1684,7 +1676,7 @@ def streamed_incremental_embedding_neardup(
         new, "vec_id", n_slices, "inc_embdup_", merge
     ):
         return spark.createDataFrame([], "vec_id long")
-    return spark.read.parquet(accepted_path).select("vec_id")
+    return _read_accepted(spark, accepted_path, "vec_id")
 
 
 def cdc_batch_against_store(
@@ -1713,8 +1705,8 @@ def cdc_batch_against_store(
     alphabet; either way the stored-chunk SET is batch-order-independent,
     which is what makes the build SQL-replayable. Only (hash, len) rows
     probe and extend the index; chunk text never shuffles and is never
-    re-read. The index lands in ``batch_id=N`` partitions with overwrite
-    mode (replay idempotency, same as dedup_batch_against_index); the
+    re-read. The index lands in ``batch_id`` partition overwrites
+    (replay idempotency, same as dedup_batch_against_index); the
     ledger row is driver-sized by construction (one per batch), so it is
     returned rather than written — persist it wherever the job's metrics
     go."""
@@ -1752,8 +1744,9 @@ def cdc_batch_against_store(
         )
     new = new.localCheckpoint(eager=True)
     ns = new.agg(F.count(F.lit(1)).alias("n"), F.sum("clen").alias("c")).first()
-    new.select("h", "clen").write.mode("overwrite").parquet(
-        f"{chunk_index_path}/batch_id={batch_id}"
+    write_table(
+        with_batch_id(new.select("h", "clen"), batch_id), chunk_index_path,
+        mode="overwrite", partition_by=["batch_id"],
     )
     free_checkpoint(new)  # free this batch's checkpoint blocks
     free_checkpoint(mine)

@@ -156,26 +156,30 @@ def test_streamed_store_equals_batch_store_and_direct(spark, events, sf_dir, sto
 
 def test_streamed_store_ingest_is_replay_safe(spark, events):
     """foreachBatch is at-least-once: re-running a micro-batch's ingest
-    with the SAME batch id must leave the store unchanged (dynamic
-    overwrite on the ingest_batch partition), so even SUM-law partials
-    would survive a replay."""
+    with the SAME batch id must leave the store unchanged (the lake's
+    partition overwrite of the batch_id partition, the write
+    streamed_sketch_store makes), so even SUM-law partials would survive
+    a replay — and a replay after a later batch must keep that batch."""
+    from reddit_etl_pipeline_spark.sources.lake import with_batch_id, write_table
+
     d = scratch_dir("test_stream_store_replay_") + "/hll_users"
     part = SS.day_partials(events, tables=("hll_users",))["hll_users"]
 
     def write(batch_id):
-        (
-            part.withColumn("ingest_batch", F.lit(batch_id))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(d)
+        write_table(
+            with_batch_id(part, batch_id).repartition(1),
+            d,
+            mode="overwrite",
+            partition_by=["batch_id"],
         )
 
     write(0)
     once = spark.read.parquet(d).count()
     write(0)  # the replay
     assert spark.read.parquet(d).count() == once
+    write(1)
+    write(0)  # a replay after batch 1 replaces only batch 0's partial
+    assert spark.read.parquet(d).count() == 2 * once
 
 
 def test_window_users_limits(spark, events, store):

@@ -1,10 +1,14 @@
-"""Every stream twin on edge sources, against its DuckDB oracle.
+"""Every stream twin and every batch store on edge sources, against
+its DuckDB oracle.
 
-Each ``stream_*`` entry of ``queries()`` runs on a zero-row and on a
-one-row copy of the sf0.001 tables (every table cut to its first n
-rows). An edge source must give the oracle's answer or a loud error:
-the one accepted error is ``stream_ann_store`` on an empty corpus,
-which has nothing to train the coarse quantizer on.
+Each ``stream_*`` entry of ``queries()``, and each batch store query
+(the ANN, MinHash, sketch and rollup stores, which write per-batch
+partials and answer from them), runs on a zero-row and on a one-row
+copy of the sf0.001 tables (every table cut to its first n rows). An
+edge source must give the oracle's answer or a loud error: the only
+accepted errors are the IVF stores (``stream_ann_store``,
+``ann_store_topk``, ``ann_store_topk_pq``) on an empty corpus, which
+has nothing to train the coarse quantizer on.
 """
 
 import os
@@ -20,7 +24,14 @@ import __spark_entry__ as E  # noqa: E402
 from test_entry import TABLES, rows_to_multiset  # noqa: E402
 
 STREAM_QUERIES = sorted(n for n in E.queries() if n.startswith("stream_"))
+STORE_QUERIES = sorted(
+    n
+    for n in E.queries()
+    if n.startswith(("ann_store_", "neardup_store_", "rollup_store_", "sketch_store_"))
+)
 ORACLES = E.oracle_sql()
+#: an empty corpus has nothing to train IVF centroids on
+EMPTY_CORPUS_RAISES = {"stream_ann_store", "ann_store_topk", "ann_store_topk_pq"}
 
 
 @pytest.fixture(scope="session")
@@ -46,12 +57,17 @@ def test_every_stream_twin_has_an_oracle():
     assert [n for n in STREAM_QUERIES if n not in ORACLES] == []
 
 
+def test_every_batch_store_has_an_oracle():
+    assert len(STORE_QUERIES) == 10
+    assert [n for n in STORE_QUERIES if n not in ORACLES] == []
+
+
 @pytest.mark.parametrize("n_rows", [0, 1], ids=["zero_rows", "one_row"])
-@pytest.mark.parametrize("name", STREAM_QUERIES)
+@pytest.mark.parametrize("name", STREAM_QUERIES + STORE_QUERIES)
 def test_stream_twin_edge_source(spark, edge_dirs, name, n_rows):
     d, con = edge_dirs[n_rows]
     q = E.queries()[name]
-    if name == "stream_ann_store" and n_rows == 0:
+    if name in EMPTY_CORPUS_RAISES and n_rows == 0:
         with pytest.raises(ValueError, match="empty corpus"):
             q(spark, d).collect()
         return

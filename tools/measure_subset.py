@@ -14,6 +14,12 @@ group, which a per-group count misses). Unlike wall time the count is
 noise-free: equal counts before and after a refactor are the check that
 it kept the query's plans.
 
+Each query also reports a sorted-row digest (``"digests"``): the
+order-independent value hash of ``tools/check_correctness.normalize``
+over its result, computed once after the timed reps (outside the
+timing and the job count). Equal digests on two trees are the
+"same results" check at scales where no oracle runs.
+
 Usage: python tools/measure_subset.py q1,q2,... [reps]
 """
 
@@ -26,6 +32,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
+from tools.check_correctness import normalize  # noqa: E402
 
 
 def main() -> None:
@@ -69,7 +76,7 @@ def main() -> None:
     bench.warm_probe(spark)
     pb = bench.calibration_probe(spark)
     sc = spark.sparkContext
-    timings, jobs = {}, {}
+    timings, jobs, digests = {}, {}, {}
     for name in names:
         best, counts = float("inf"), []
         for rep in range(reps):
@@ -82,6 +89,7 @@ def main() -> None:
             counts.append(tagged_jobs(tag))
         timings[name] = best
         jobs[name] = counts[0] if len(set(counts)) == 1 else counts
+        digests[name] = normalize(queries[name](spark, bench.SF_DIR).toPandas())[1]
     pa = bench.calibration_probe(spark)
     print(json.dumps({
         "probes": [pb, pa],
@@ -89,6 +97,7 @@ def main() -> None:
         "clean": max(pb, pa) <= 2 * bench.PROBE_FLOOR_S,
         "queries": timings,
         "jobs": jobs,
+        "digests": digests,
     }))
     spark.stop()
 
