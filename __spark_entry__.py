@@ -919,8 +919,10 @@ def _part_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _part_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the part co-purchase graph — the
     prerequisite labeling for any per-component statistic at corpus
-    scale (dedup.connected_components: iterative min-label propagation,
-    O(diameter) rounds, converge-or-raise). Returns (part_id,
+    scale (dedup.connected_components: min-label propagation to a
+    converge-or-raise fixpoint, in one task while the edge set is under
+    ``CC_ONE_TASK_BYTES`` — the sf0.1 graph is — and on the distributed
+    loop above it). Returns (part_id,
     component_id = component min, component_size). ORACLE-CHECKED via
     the same star-rounds replay the near-dup cluster family uses
     (neardup_oracles.cc_star_member_ctes) — first-class here instead of

@@ -21,6 +21,7 @@ Embedding-cosine near-dup lives in ``similarity.py``.
 
 from __future__ import annotations
 
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -604,12 +605,70 @@ def greedy_accept_order(doc_ids: list[int], edges: list[tuple[int, int]]) -> set
 # ---------------------------------------------------- duplicate clustering
 
 
-#: min-label propagation steps fused into one plan per materialization +
-#: change-count round (see the STEP FUSION note in connected_components).
-#: Measured at sf0.1 (round 11): the per-round wall is the fixed
-#: job/checkpoint/count floor, so halving the round count wins even
-#: though each round's plan carries two edge joins.
-CC_STEPS_PER_ROUND = 2
+#: Bytes of symmetrized edge set (two int64 endpoints per directed edge,
+#: ``_CC_EDGE_BYTES``) below which ``connected_components`` runs in
+#: ONE Python task instead of the distributed loop. Sized to one Python
+#: worker: the task holds the edges plus their sort permutation and the
+#: gathered neighbor labels. Measured on the sf0.1 part co-purchase
+#: graph (1,196,000 pairs = 2,392,000 directed edges, 36.5 MiB, inside
+#: the bound; 4 cores): the worker's peak RSS was 213 MiB (61 MiB of it
+#: the forked daemon), and the step function alone grew 94 MiB (2.6x
+#: the edge bytes), so at the bound one worker peaks near 0.45 GB.
+CC_ONE_TASK_BYTES = 128 << 20
+_CC_EDGE_BYTES = 16
+#: the one-line non-convergence message's fixed prefix; the small path
+#: finds it in the worker's wrapped exception to re-raise the message
+_CC_NOT_CONVERGED = "connected_components did not converge after"
+
+
+def _cc_not_converged(steps: int, n: int | None) -> str:
+    return (
+        f"{_CC_NOT_CONVERGED} {steps} propagation steps "
+        f"({n} labels still changing); raise max_iter"
+    )
+
+
+def _cc_one_task(edges: DataFrame, max_iter: int) -> DataFrame:
+    """``connected_components``' small path: every edge in ONE task,
+    where synchronous min-label steps run in numpy — the loop's steps
+    exactly (each node takes the min of its own and its neighbors'
+    previous labels), so the step count, the stop rule and the
+    non-convergence error are the loop's. Integer logic only. Edges are
+    sorted by source once; a step is one gather and one
+    ``np.minimum.reduceat`` over the source runs (every node is a
+    source, the edge set being symmetric)."""
+    import numpy as np
+    import pandas as pd
+
+    def run(batches):
+        parts = [b for b in batches if len(b)]
+        if not parts:  # no edges, no nodes
+            return
+        s = np.concatenate([b["s"].to_numpy() for b in parts])
+        d = np.concatenate([b["d"].to_numpy() for b in parts])
+        del parts
+        order = np.argsort(s)
+        s, d = s[order], d[order]
+        del order
+        starts = np.flatnonzero(np.r_[True, s[1:] != s[:-1]])
+        nodes = s[starts]
+        nbr = np.searchsorted(nodes, d)
+        del s, d
+        # labels are node positions: ``nodes`` is sorted, so the min
+        # position is the min node id
+        lbl = np.arange(len(nodes))
+        n = None
+        for _step in range(max_iter):
+            nxt = np.minimum(lbl, np.minimum.reduceat(lbl[nbr], starts))
+            n = int(np.count_nonzero(nxt != lbl))
+            lbl = nxt
+            if n == 0:
+                yield pd.DataFrame({"node": nodes, "component": nodes[lbl]})
+                return
+        raise RuntimeError(_cc_not_converged(max_iter, n))
+
+    t = edges.schema["s"].dataType.simpleString()
+    return edges.coalesce(1).mapInPandas(run, f"node {t}, component {t}")
 
 
 def connected_components(
@@ -620,21 +679,36 @@ def connected_components(
     pre_normalized: bool = False,
     assume_distinct: bool = False,
 ) -> DataFrame:
-    """Connected components over a pair graph via iterative min-label
-    propagation: each node repeatedly adopts the smallest label among
-    itself and its neighbors, converging in O(component diameter)
-    rounds (near-dup graphs are clique-ish -> 2-3 rounds).
+    """Connected components over a pair graph via synchronous min-label
+    propagation: each step, every node adopts the smallest label among
+    itself and its neighbors; the labels stop changing after
+    O(component diameter) steps (near-dup graphs are clique-ish, so a
+    few). A run of ``max_iter`` steps that still changes a label raises
+    ``RuntimeError`` naming the steps run — partial labels would
+    silently split components.
 
-    Returns (node, component) with component = min node id reachable.
-    Each round is one shuffle join + one aggregate; the loop stops early
-    when no label changes (driver-side count — the standard Spark CC
-    pattern, cf. GraphX/GraphFrames which do the same under the hood).
+    Returns (node, component) with component = min node id reachable,
+    materialized (eager ``localCheckpoint``), so a failure surfaces
+    inside this call.
+
+    Two paths run the same steps, chosen from the exact directed edge
+    count x 16 B against ``CC_ONE_TASK_BYTES`` (the pattern of
+    ``minhash_pairs_from_signatures``):
+
+    - below the bound, all edges go to ONE task and the steps run
+      in numpy (``_cc_one_task``). At the sizes this engine serves the
+      loop's cost is all per-round fixed cost (a checkpoint, a change
+      count job and two propagation joins, 1.4-3.9 s per round at sf0.1
+      whatever the partition count), which one task never pays;
+    - above it, one propagation step per ``fixpoint.iterate`` round:
+      one shuffle join + one aggregate + a left join back, checkpointed,
+      with a driver-side change count against the carried round-start
+      label (the standard Spark CC pattern, cf. GraphX/GraphFrames).
 
     ``pre_normalized``: the input is already the MATERIALIZED distinct
-    lo<hi edge set (graph_store.store_edges — parquet-backed), so the
-    symmetrized union is distinct by construction: skip the distinct
-    shuffle and the re-materialization (each round re-reads columnar
-    storage directly).
+    lo<hi edge set (graph_store.store_edges — an unfiltered parquet
+    read), so the symmetrized union is distinct by construction: skip
+    the distinct shuffle and the re-materialization.
 
     ``assume_distinct``: the input is a distinct lo<hi pair set but NOT
     yet materialized (``jaccard_pairs``/``minhash_neardup_pairs``
@@ -648,18 +722,44 @@ def connected_components(
     if not pre_normalized:
         if not assume_distinct:
             edges = edges.distinct()
-        # materialize once: every propagation round re-reads the edge
-        # set, and without this the (possibly expensive) pair-
-        # generation plan above would re-execute per round
+        # materialize once: the path decision counts it, and every loop
+        # round re-reads it — without this the (possibly expensive)
+        # pair-generation plan above would re-execute per read
         edges = edges.localCheckpoint(eager=True)
+
+    # exact directed edge count: a cached-block read of the checkpoint,
+    # or row-group metadata for a ``pre_normalized`` parquet read
+    if edges.count() * _CC_EDGE_BYTES < CC_ONE_TASK_BYTES:
+        try:
+            return _cc_one_task(edges, max_iter).localCheckpoint(eager=True)
+        except PythonException as e:
+            # the worker's non-convergence error arrives wrapped in the
+            # failed job's exception; raise it as the loop would
+            msg = str(e)
+            start = msg.find(_CC_NOT_CONVERGED)
+            if start < 0:
+                raise
+            raise RuntimeError(msg[start:].splitlines()[0]) from None
+
     labels = (
         edges.select(F.col("s").alias("node")).distinct().withColumn("label", F.col("node"))
     )
 
-    def _propagate(lbl: DataFrame, carry: list[str]) -> DataFrame:
-        """One min-label step: label <- min(label, min over neighbors).
-        ``carry`` columns ride along untouched (the round-start label,
-        so the change count needs no extra join)."""
+    # NOTE (round 10, measured on the distributed loop): pointer-jumping
+    # (label <- label[label] via a labels self-join each round, the
+    # Kiveris et al. shortcut) was tried here and MEASURED A 3x
+    # REGRESSION at sf0.1 under clean probes (neardup_clusters 12.7 ->
+    # 36.7 s, stream_incremental_neardup 14.6 -> 25.0 s): the extra
+    # per-round labels shuffle + join costs more than the rounds it
+    # saves on these shallow graphs (8 rounds, changed =
+    # 2610/2596/1668/543/79/7/1/0 — diameter is already small because
+    # near-dup components are near-cliques). Keep plain neighbor-min;
+    # revisit only with a measured deep-chain workload.
+    def _step(lbl: DataFrame, _r: int) -> DataFrame:
+        """One min-label step: label <- min(label, min over neighbors);
+        the round-start label rides along as ``label0``, so the change
+        count reads the checkpoint with no extra join."""
+        lbl = lbl.select("node", "label", F.col("label").alias("label0"))
         nbr = (
             edges.join(lbl, edges.d == lbl.node)
             .groupBy("s")
@@ -670,50 +770,15 @@ def connected_components(
             F.least(
                 F.col("label"), F.coalesce("nbr_label", F.col("label"))
             ).alias("label"),
-            *carry,
+            "label0",
         )
 
-    # NOTE (round 10): pointer-jumping (label <- label[label] via a
-    # labels self-join each round, the Kiveris et al. shortcut) was
-    # tried here and MEASURED A 3x REGRESSION at sf0.1 under clean
-    # probes (neardup_clusters 12.7 -> 36.7 s, stream_incremental_
-    # neardup 14.6 -> 25.0 s): the extra per-round labels shuffle +
-    # join costs more than the rounds it saves on these shallow
-    # graphs (8 rounds, changed = 2610/2596/1668/543/79/7/1/0 —
-    # diameter is already small because near-dup components are
-    # near-cliques). Keep plain neighbor-min; revisit only with a
-    # measured deep-chain workload.
-    #
-    # STEP FUSION (round 11): the per-round wall at sf0.1 is the fixed
-    # job/checkpoint/count floor, not the join compute (8-vs-32-core
-    # scaling ratio ~1 for every CC consumer), so run CC_STEPS_PER_ROUND
-    # propagation steps inside ONE plan per materialization + change
-    # count. Exactness: labels decrease monotonically, so "no change
-    # across a fused round" still certifies the fixpoint (if any inner
-    # step changed a label, the round's end state differs from its
-    # start), and running extra steps past the fixpoint is a no-op —
-    # final labels are bit-identical to single-stepping.
-    def _round(lbl: DataFrame, _r: int) -> DataFrame:
-        stepped = lbl.select("node", "label").withColumn("label0", F.col("label"))
-        for _s in range(CC_STEPS_PER_ROUND):
-            stepped = _propagate(stepped, ["label0"])
-        return stepped
-
-    # the change count reads the round's checkpoint (label0 rides along),
-    # so the propagation joins execute once per round, not twice
     labels = iterate(
         labels,
-        _round,
-        -(-max_iter // CC_STEPS_PER_ROUND),
+        _step,
+        max_iter,
         changed=lambda lbl: lbl.filter(F.col("label") != F.col("label0")).count(),
-        # returning partial labels would silently split components (graph
-        # diameter > max_iter); callers must see the failure, not wrong data
-        stuck=lambda rounds_run, n: RuntimeError(
-            f"connected_components did not converge after "
-            f"{rounds_run * CC_STEPS_PER_ROUND} propagation steps "
-            f"({rounds_run} rounds of {CC_STEPS_PER_ROUND}; {n} labels "
-            f"still changing); raise max_iter"
-        ),
+        stuck=lambda steps, n: RuntimeError(_cc_not_converged(steps, n)),
     )
     return labels.select(F.col("node"), F.col("label").alias("component"))
 
@@ -786,9 +851,10 @@ def neardup_canonical(
     quality −1 so they never win a cluster with a scored member.
 
     Scale shape: the cluster pass is ``neardup_clusters`` (bounded
-    min-label propagation); canonical selection is ONE map-side
-    combinable ``max(struct(quality, −id))`` per cluster + an equi-join
-    back — no window sort of the corpus. The cluster pass dominates cost
+    min-label propagation, one task or the distributed loop by edge
+    count — see ``connected_components``); canonical selection is ONE
+    map-side combinable ``max(struct(quality, −id))`` per cluster + an
+    equi-join back — no window sort of the corpus. The cluster pass dominates cost
     (exact-Jaccard PPJoin by default, because the oracle needs
     exactness); at 100 TB pass ``method='minhash'`` (the banded-LSH pair
     graph, wired through the curate CLI as ``--neardup minhash``) — the

@@ -382,7 +382,8 @@ def leakage_safe_split(
 
     Composition: the banded MinHash pair graph → connected components
     (``dedup.neardup_clusters``, the 100 TB path — banding bounds the
-    self-join, CC is O(diameter) rounds over clique-ish components) →
+    self-join, CC takes few steps over clique-ish components, in one
+    task below ``dedup.CC_ONE_TASK_BYTES``) →
     ``train_val_test_split``'s Knuth-band rule applied to the CLUSTER
     REPRESENTATIVE's id instead of the member's, so every member
     inherits its cluster's split verbatim. Singletons (rep == self)

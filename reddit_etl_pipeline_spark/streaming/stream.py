@@ -2064,9 +2064,10 @@ def streamed_part_components(
     edges cannot move a min label.
 
     Scale: state is node-cardinality (|parts|, two BIGINTs per row —
-    never edges, which at 100 TB dwarf the node set); per batch the CC
-    loop runs O(diameter of NEW structure) rounds because prior
-    components are already depth-1 stars. State swaps through
+    never edges, which at 100 TB dwarf the node set); per batch CC runs
+    O(diameter of NEW structure) steps because prior components are
+    already depth-1 stars, in one task while stars ∪ new edges are
+    under ``dedup.CC_ONE_TASK_BYTES``. State swaps through
     ``lake.swap_state``, like the kmv and upsert states. Returns
     (part_id, component_id, component_size).
     """

@@ -6,6 +6,7 @@ joins for dims, top-K as TakeOrderedAndProject) must survive refactors.
 import contextlib
 import io
 import os
+import re
 import sys
 
 import pytest
@@ -767,3 +768,51 @@ def test_minhash_tail_broadcast_policy_is_source_independent(
     for p, name in [(p_store, "store"), (p_inline, "inline")]:
         assert "SortMergeJoin" not in p, f"{name} tail fell back to SMJ"
         assert "BroadcastHashJoin" in p
+
+
+def _checkpointed_plans(monkeypatch, spark, run):
+    """The physical plan of every frame ``run()`` checkpoints (a
+    connected_components result is itself a checkpoint, so its own plan
+    shows only the scan of the stored blocks)."""
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+    plans = []
+
+    def spy(self, *a, **kw):
+        plans.append(plan_of(self))
+        return real(self, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(cls, "localCheckpoint", spy)
+        return run(), plans
+
+
+def test_cc_path_decision_plans(spark, monkeypatch):
+    """connected_components picks its path from the exact edge count:
+    below ``CC_ONE_TASK_BYTES`` the labels are one MapInPandas over ONE
+    partition with no join anywhere; with the bound patched to 0 every
+    step is the loop's propagation joins and no Python runs."""
+    from reddit_etl_pipeline_spark.operators import dedup as D
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "doc_a bigint, doc_b bigint"
+    )
+    cc, plans = _checkpointed_plans(
+        monkeypatch, spark, lambda: D.connected_components(pairs)
+    )
+    assert cc.rdd.getNumPartitions() == 1
+    assert plans[-1].count("MapInPandas (") == 1
+    assert "Coalesce (" in plans[-1]
+    assert not any("Join" in p for p in plans)
+
+    monkeypatch.setattr(D, "CC_ONE_TASK_BYTES", 0)
+    _, plans = _checkpointed_plans(
+        monkeypatch, spark, lambda: D.connected_components(pairs)
+    )
+    assert not any("MapInPandas" in p for p in plans)
+    # 1-2-3 needs two changing steps and one that certifies the
+    # fixpoint; each is the neighbor join + the left join back
+    steps = [p for p in plans if "Join" in p]
+    assert len(steps) == 3
+    for p in steps:
+        assert len(re.findall(r"^\(\d+\) \w*Join", p, re.M)) == 2
